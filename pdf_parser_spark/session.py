@@ -16,7 +16,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _default_heap() -> str:
@@ -61,3 +62,19 @@ def build_session(app_name: str = "pdf_parser_spark",
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType) -> DataFrame:
+    """A DataFrame over a few driver-side rows, built on the Arrow path
+    (``spark.sql.execution.arrow.pyspark.enabled``, which
+    :func:`build_session` turns on): the rows reach the JVM as one Arrow
+    batch and plan as a ``LocalTableScan``. ``createDataFrame(list)``
+    instead goes through ``sc.parallelize`` and re-serializes the rows in
+    a Python worker task, which costs about 1 s per write even for one
+    row (4-vCPU host). Naive timestamps are read in the session time
+    zone."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame.from_records(rows, columns=schema.fieldNames()), schema)

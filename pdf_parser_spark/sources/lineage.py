@@ -18,7 +18,14 @@ JSON per document (reference process_gea_pdfs.py:95-166) and the
 - after the data lands, one lineage row per bucket (status, conv/chunk/char
   counts, wall seconds) is appended to the ``lineage`` table, plus
   per-conversation rows to the ``metrics`` table (mirroring the reference's
-  chunk_statistics, pdf_parser.py:338-345).
+  chunk_statistics, pdf_parser.py:338-345). Both are computed from the
+  job's persisted fused map output, whose non-sentinel rows are exactly
+  the chunk rows just written — the ``extracted`` partitions are never
+  read back.
+- the ``manifest`` (the bucket universe, ``n_buckets``) is written once,
+  by the first call on an output dir; a later call with a different
+  ``n_buckets`` raises instead of mixing two universes in one lineage
+  table.
 - resume = read ``lineage``, skip done buckets. The scan filter
   ``NOT bucket IN (done)`` is the anti-join of SURVEY.md §2 S7, expressed
   as partition pruning.
@@ -34,7 +41,9 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
@@ -43,6 +52,7 @@ from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
 from pdf_parser_spark.config import ExtractionConfig
 from pdf_parser_spark.operators.merge import chunks_from_local, tokenized_local
 from pdf_parser_spark.pipeline import full_metrics
+from pdf_parser_spark.session import local_frame
 
 LINEAGE_SCHEMA = StructType([
     StructField("bucket_id", IntegerType()),
@@ -60,6 +70,8 @@ LINEAGE_SCHEMA = StructType([
     StructField("finished_ts", TimestampType()),
 ])
 
+MANIFEST_SCHEMA = StructType([StructField("n_buckets", IntegerType())])
+
 
 def bucket_expr(n_buckets: int, col: str = "conv_id"):
     return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
@@ -71,21 +83,43 @@ class RunResult:
     skipped_buckets: list[int]
 
 
-def _done_buckets(spark: SparkSession, lineage_path: str) -> set[int]:
+def _read_committed(spark: SparkSession, path: str,
+                    schema: StructType) -> DataFrame | None:
+    """The committed rows of the table at ``path``; None when the path
+    does not exist. Any other read error (a corrupt file, say) raises.
+    The schema is given, so no schema-inference job runs, and a dir
+    holding only the ``_temporary`` of a first write killed before its
+    job commit reads as empty."""
     try:
-        rows = (spark.read.parquet(lineage_path)
-                .where(F.col("status") == "done")
-                .select("bucket_id").distinct().collect())
-    except Exception:  # first run: lineage table does not exist yet
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
+def _done_buckets(spark: SparkSession, lineage_path: str) -> set[int]:
+    lineage = _read_committed(spark, lineage_path, LINEAGE_SCHEMA)
+    if lineage is None:  # first run: no lineage table yet
         return set()
+    rows = (lineage.where(F.col("status") == "done")
+            .select("bucket_id").distinct().collect())
     return {r.bucket_id for r in rows}
+
+
+def _manifest_buckets(spark: SparkSession, output_dir: str) -> int | None:
+    manifest = _read_committed(spark, f"{output_dir}/manifest",
+                               MANIFEST_SCHEMA)
+    rows = [] if manifest is None else manifest.collect()
+    return rows[0].n_buckets if rows else None
 
 
 def write_manifest(spark: SparkSession, output_dir: str,
                    n_buckets: int) -> None:
     """One-row (n_buckets) parquet at ``<dir>/manifest`` — engine-written
-    (no driver-local open()), so it works on any Hadoop-visible FS."""
-    (spark.createDataFrame([(int(n_buckets),)], "n_buckets int")
+    (no driver-local open()), so it works on any Hadoop-visible FS.
+    Overwrite clears what a first write killed before its commit left."""
+    (local_frame(spark, [(int(n_buckets),)], MANIFEST_SCHEMA)
      .coalesce(1).write.mode("overwrite").parquet(f"{output_dir}/manifest"))
 
 
@@ -94,10 +128,8 @@ def staged_run_incomplete(spark: SparkSession,
     """(done, expected) bucket counts when the staged extraction at
     ``output_dir`` is verifiably incomplete; None when complete or when
     no manifest exists (a foreign chunk table — nothing to check)."""
-    try:
-        expected = spark.read.parquet(f"{output_dir}/manifest") \
-            .collect()[0].n_buckets
-    except Exception:  # no manifest: not a run_extraction output
+    expected = _manifest_buckets(spark, output_dir)
+    if expected is None:  # not a run_extraction output
         return None
     done = len(_done_buckets(spark, f"{output_dir}/lineage"))
     return None if done >= expected else (done, expected)
@@ -121,8 +153,18 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
     # run manifest: records the bucket universe so downstream consumers
     # (jobs/training_pipeline.py --input-kind extracted) can tell a
     # completed table from one whose run was killed mid-way — lineage
-    # rows alone can't, because only DONE buckets ever get a row
-    write_manifest(spark, output_dir, n_buckets)
+    # rows alone can't, because only DONE buckets ever get a row.
+    # Written only when absent: an overwrite deletes the old manifest
+    # before writing the new one, and a resume killed in between would
+    # leave a half-built table that reads as complete.
+    recorded = _manifest_buckets(spark, output_dir)
+    if recorded is None:
+        write_manifest(spark, output_dir, n_buckets)
+    elif recorded != n_buckets:
+        raise ValueError(
+            f"{output_dir} was started with n_buckets={recorded}; "
+            f"continuing it with n_buckets={n_buckets} would mix two "
+            "bucket universes in one lineage table")
 
     transcripts = spark.read.parquet(input_path)
 
@@ -137,10 +179,10 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
     for group in groups:
         t0 = time.monotonic()
         src = transcripts.where(bucket_expr(n_buckets).isin(group))
-        # one tokenize pass per job: the fused map output feeds both the
-        # extracted table and the cleaning metrics (persisted chunk-level
-        # rows — bounded by the bucket group, far smaller than raw text
-        # re-tokenization)
+        # one tokenize pass per job: the fused map output feeds the
+        # extracted table, the cleaning metrics and the lineage counts
+        # (persisted chunk-level rows — bounded by the bucket group, far
+        # smaller than raw text re-tokenization)
         local = tokenized_local(src, cfg).persist()
         chunks = chunks_from_local(local).withColumn(
             "bucket_id", bucket_expr(n_buckets))
@@ -150,24 +192,26 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
                .option("partitionOverwriteMode", "dynamic")
                .mode("overwrite").parquet(extracted_path))
 
-        out = spark.read.parquet(extracted_path).where(
-            F.col("bucket_id").isin(group))
-        (full_metrics(src, out.drop("bucket_id"), cfg, local=local)
+        # the non-sentinel map rows are the chunk rows just written, and
+        # carry every column the chunk stats read (conv_id, chunk_type,
+        # char_count) — no read-back of the extracted partitions
+        chunk_rows = local.where(F.col("chunk_type").isNotNull())
+        (full_metrics(src, chunk_rows, cfg, local=local)
             .withColumn("bucket_id", bucket_expr(n_buckets))
             .write.partitionBy("bucket_id")
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite").parquet(metrics_path))
-        local.unpersist()
 
         # one aggregate row per bucket — bounded by buckets_per_job
         agg = {r["bucket_id"]: r for r in
-               out.groupBy("bucket_id").agg(
-                   F.countDistinct("conv_id").alias("n_convs"),
-                   F.count("*").alias("n_chunks"),
-                   F.sum("char_count").alias("n_chars")).collect()}
+               chunk_rows.groupBy(bucket_expr(n_buckets).alias("bucket_id"))
+               .agg(F.countDistinct("conv_id").alias("n_convs"),
+                    F.count("*").alias("n_chunks"),
+                    F.sum("char_count").alias("n_chars")).collect()}
+        # blocking: leave no cache eviction running under the next job
+        local.unpersist(blocking=True)
         wall = time.monotonic() - t0
-        import datetime as _dt
-        now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+        now = datetime.now(timezone.utc).replace(tzinfo=None)
         group_chars = sum(int(r["n_chars"]) for r in agg.values())
         lineage_rows = []
         for b in group:
@@ -183,7 +227,7 @@ def run_extraction(spark: SparkSession, input_path: str, output_dir: str,
                                  r["n_chunks"] if r else 0,
                                  chars,
                                  wall * share, wall, now))
-        (spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA)
+        (local_frame(spark, lineage_rows, LINEAGE_SCHEMA)
               .coalesce(1).write.mode("append").parquet(lineage_path))
         processed.extend(group)
 

@@ -42,9 +42,11 @@ import dataclasses
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from pdf_parser_spark.config import ExtractionConfig
 from pdf_parser_spark.pipeline import extract
+from pdf_parser_spark.session import local_frame
 from pdf_parser_spark.sources.cowtable import (_commit, _delete_entries,
                                                _masked_read, create_table,
                                                file_key_bounds,
@@ -53,6 +55,7 @@ from pdf_parser_spark.sources.cowtable import (_commit, _delete_entries,
                                                read_table, table_changes)
 
 CHUNK_KEY = "chunk_key"
+_CONV_SCHEMA = StructType([StructField("conv_id", StringType())])
 
 # above this many changed conversations, filter by join instead of an
 # inlined isin literal (a multi-thousand-value In expression bloats the
@@ -79,8 +82,7 @@ def _conv_filter(spark: SparkSession, df: DataFrame,
         return df.where(F.col("conv_id").isin(convs))
     # build the join side from the already-collected list — joining the
     # original changelog plan here would re-execute the whole diff
-    convs_df = spark.createDataFrame([(c,) for c in convs],
-                                     "conv_id string")
+    convs_df = local_frame(spark, [(c,) for c in convs], _CONV_SCHEMA)
     return df.join(F.broadcast(convs_df), "conv_id", "left_semi")
 
 
@@ -530,8 +532,7 @@ def refresh_metrics_table(spark: SparkSession, chunks_dir: str,
     else:
         n_changed = len(convs)
         cur = _pruned_conv_read(spark, chunks_dir, convs, version=src_v)
-        convs_df = spark.createDataFrame([(c,) for c in convs],
-                                         "conv_id string")
+        convs_df = local_frame(spark, [(c,) for c in convs], _CONV_SCHEMA)
     fresh = extraction_metrics(cur)
     # a changed conversation with NO surviving chunks has no fresh row:
     # its metrics row is stale and must go

@@ -777,6 +777,20 @@ def test_metrics_table_follows_chunk_cdc(spark, tables, tmp_path):
     assert refresh_metrics_table(spark, dst, mdir)["skipped"] is True
 
 
+def test_conv_filter_join_side_matches_isin(spark, tables):
+    """Past ``_ISIN_MAX`` conversations the filter semi-joins against a
+    frame built from the list; it keeps exactly the rows an isin keeps."""
+    from pdf_parser_spark.sources.maintain import _ISIN_MAX, _conv_filter
+    src, _ = tables
+    turns = read_table(spark, src)
+    present = sorted(r[0] for r in
+                     turns.select("conv_id").distinct().collect())[::2]
+    convs = present + [f"absent_{i}" for i in range(_ISIN_MAX)]
+    got = _conv_filter(spark, turns, convs)
+    want = turns.where(F.col("conv_id").isin(present))
+    assert _digest(got) == _digest(want) and _digest(want)[1] > 0
+
+
 def test_huge_delta_falls_back_to_join_pruning(spark, tables):
     """Past ``max_pruned_convs`` the refresh must NOT collect the
     changed ids into a driver list (the 10^8-conversation OOM); it
