@@ -89,29 +89,26 @@ SCALING_CONVS = int(os.environ.get("SPARK_GRAFT_SCALING_CONVS", "400000"))
 BENCH_SEED = 7
 
 
+# The bench's departures from session.build_session's production settings.
+# Small local files: force byte-range splits (1 MB, where production ships
+# 128 MB) so scans (and the fused mapInPandas extraction stage) use all
+# cores with several waves of tasks for load balance — emulates the
+# plentiful input splits of the 100 TB design point. Post-shuffle
+# partitions are sized so the chunk-index window sort parallelizes instead
+# of AQE-coalescing to 2-3 giant sorts.
+BENCH_CONF = {
+    "spark.sql.files.maxPartitionBytes": str(1024 * 1024),
+    "spark.sql.files.openCostInBytes": str(128 * 1024),
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+}
+
+
 def build_spark(cores: int, app: str = "bench"):
-    from pyspark.sql import SparkSession
-    return (SparkSession.builder.master(f"local[{cores}]")
-            .appName(app)
-            .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-            # small local files: force byte-range splits so scans (and the
-            # fused mapInPandas extraction stage) use all cores with several
-            # waves of tasks for load balance — emulates the plentiful input
-            # splits of the 100 TB design point
-            .config("spark.sql.files.maxPartitionBytes", str(1024 * 1024))
-            .config("spark.sql.files.openCostInBytes", str(128 * 1024))
-            # post-shuffle partitions sized so the chunk-index window sort
-            # parallelizes instead of AQE-coalescing to 2-3 giant sorts
-            .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-            .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-            .config("spark.ui.enabled", "false")
-            .config("spark.sql.session.timeZone", "UTC")
-            .getOrCreate())
+    from pdf_parser_spark.session import build_session
+    return build_session(app, cores=cores, extra_conf={
+        **BENCH_CONF,
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                              "16g")})
 
 
 def build_spark_cluster(n_executors: int, cores_per_exec: int = 4,
@@ -124,7 +121,7 @@ def build_spark_cluster(n_executors: int, cores_per_exec: int = 4,
     import subprocess as _sp
     import sys as _sys
 
-    from pyspark.sql import SparkSession
+    from pdf_parser_spark.session import build_session
 
     # executors import the package from the packaged zip ONLY (rebuilt
     # here only if missing — --scaling-cluster builds it once up front
@@ -133,25 +130,14 @@ def build_spark_cluster(n_executors: int, cores_per_exec: int = 4,
     if not os.path.exists(zip_path):
         _sp.run([_sys.executable, os.path.join(REPO, "jobs", "package.py")],
                 check=True, capture_output=True)
-    total = n_executors * cores_per_exec
-    spark = (SparkSession.builder
-            .master(f"local-cluster[{n_executors},{cores_per_exec},3072]")
-            .appName(app)
-            .config("spark.executor.memory", "2g")
-            .config("spark.submit.pyFiles", zip_path)
-            .config("spark.sql.shuffle.partitions", str(max(total, 8)))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-            .config("spark.sql.files.maxPartitionBytes", str(1024 * 1024))
-            .config("spark.sql.files.openCostInBytes", str(128 * 1024))
-            .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-            .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-            .config("spark.ui.enabled", "false")
-            .config("spark.sql.session.timeZone", "UTC")
-            .getOrCreate())
+    spark = build_session(app, cores=n_executors * cores_per_exec, extra_conf={
+        **BENCH_CONF,
+        "spark.master":
+            f"local-cluster[{n_executors},{cores_per_exec},3072]",
+        "spark.executor.memory": "2g",
+        "spark.submit.pyFiles": zip_path,
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                              "8g")})
     # spark.submit.pyFiles only takes effect when THIS process's JVM is
     # launched by spark-submit; if any prior session already started the
     # JVM (e.g. corpus generation in local mode) the config is inert, so

@@ -79,18 +79,19 @@ def main() -> int:
                          "oracle pass is single-threaded Python)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from pdf_parser_spark.config import CLEANING_CONFIG, DEFAULT_CONFIG
     from pdf_parser_spark.operators.merge import (extract_chunks,
                                                   extract_chunks_bucketed)
+    from pdf_parser_spark.session import build_session
 
-    spark = (SparkSession.builder.master(f"local[{os.cpu_count()}]")
-             .config("spark.sql.shuffle.partitions", str(os.cpu_count()))
-             .config("spark.sql.files.maxPartitionBytes", str(1024 * 1024))
-             .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    # bench.py's split sizing (1 MB, where production ships 128 MB), so a
+    # local corpus of a few files still splits into many tasks
+    spark = build_session(
+        "equality_check", cores=os.cpu_count(),
+        shuffle_partitions=os.cpu_count(), extra_conf={
+            "spark.sql.files.maxPartitionBytes": str(1024 * 1024),
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+            "spark.driver.memory": "16g"})
     ok = True
     src = spark.read.parquet(args.corpus)
     for cfg, name in ((DEFAULT_CONFIG, "default"),

@@ -1,7 +1,7 @@
 """Minimal stdlib PNG codec — the default image decode path, unblocked.
 
 The container has no pillow and no network to vendor it (attempts logged
-in tests/test_iceberg_gate.py), but PNG needs nothing beyond ``zlib`` +
+in BASELINE.md's environment-gate log), but PNG needs nothing beyond ``zlib`` +
 ``struct``: the format is DEFLATE-compressed scanlines behind one of
 five byte-level prediction filters (PNG spec, RFC 2083 §6). This module
 implements exactly the subset the thumbnail pipeline needs —

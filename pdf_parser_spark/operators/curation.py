@@ -15,11 +15,12 @@ corpus goes through before pretraining:
 - sequence packing: concat-and-cut packing of documents into fixed
   token-budget training sequences, with per-document span bookkeeping.
 
-Everything is JVM column expressions except nothing — there is no Python
-in any of these paths. The repeated-element / boilerplate spirit mirrors
-the reference's repeated-header detection (reference pdf_parser.py:200-259
-drops repeated page furniture; the repetition filters here generalize the
-same "repeated content is low-value" rule to training corpora).
+Everything is JVM column expressions except the repetition counts, which
+are one Arrow-batched pandas UDF (see the scale notes). The repeated-
+element / boilerplate spirit mirrors the reference's repeated-header
+detection (reference pdf_parser.py:200-259 drops repeated page furniture;
+the repetition filters here generalize the same "repeated content is
+low-value" rule to training corpora).
 
 Scale notes (100 TB):
 - decontamination joins on xxhash64(ngram) longs, never raw 13-gram
@@ -27,16 +28,12 @@ Scale notes (100 TB):
   cache); the eval side is DISTINCT-reduced and broadcast by default
   (eval sets are ~1e3-1e5 docs; pass broadcast_eval=False past ~100 MB
   of hashed grams to fall back to a shuffle join).
-- repetition features are per-row and zero-shuffle. The hot path is an
-  Arrow-batched pandas UDF doing O(L) Counter passes per document (the
-  engine's measured lesson — textstats.lang_id_expr's docstring: the
-  interpreted higher-order expression twins ran ~8x slower than Arrow
-  UDFs; here the expression twin is additionally O(L^2) in the per-doc
-  line/gram count, measured 81 s vs ~2 s on the 500-doc contract run).
-  The expression twin (repetition_features_expr) is kept as the
-  no-Python-workers fallback, equality-pinned by pytest. Fractions are
-  derived JVM-side with F.round on both paths so DuckDB oracles stay
-  bit-identical.
+- repetition features are per-row and zero-shuffle: one Arrow-batched
+  pandas UDF doing O(L) Counter passes per document. A Catalyst
+  higher-order-expression rendition was measured ~40x slower (81 s vs
+  ~2 s on the 500-doc contract run): it runs interpreted and is O(L^2)
+  in the per-doc line/gram count. Fractions are derived JVM-side with
+  F.round so DuckDB oracles stay bit-identical.
 - global shuffle / packing avoid the single-partition global window via
   prefix-sum decomposition: 16^prefix_len md5-prefix groups (default
   65,536) get per-group windows (distributed) plus a broadcast offset
@@ -198,26 +195,6 @@ def _repetition_counts_series(s: pd.Series) -> pd.DataFrame:
 repetition_counts_udf = pandas_udf(_repetition_counts_series, _REP_SCHEMA)
 
 
-def _repetition_fracs(df: DataFrame, n_lines: Column, n_dup: Column,
-                      line_chars: Column, dup_chars: Column, bi_cov: Column,
-                      tri_cov: Column, n_chars: Column) -> DataFrame:
-    """Derive the published fraction columns JVM-side (F.round, so the
-    UDF path, the expression twin, and the DuckDB oracle all round the
-    same way)."""
-    nl = F.when(n_lines > 0, n_lines.cast("double")).otherwise(F.lit(1.0))
-    nc = F.when(line_chars > 0, line_chars.cast("double")) \
-          .otherwise(F.lit(1.0))
-    nz = F.when(n_chars > 0, n_chars.cast("double")).otherwise(F.lit(1.0))
-    return (df
-            .withColumn("n_lines", n_lines)
-            .withColumn("dup_line_frac",
-                        F.round(n_dup.cast("double") / nl, 6))
-            .withColumn("dup_line_char_frac",
-                        F.round(dup_chars.cast("double") / nc, 6))
-            .withColumn("top_bigram_char_frac", F.round(bi_cov / nz, 6))
-            .withColumn("top_trigram_char_frac", F.round(tri_cov / nz, 6)))
-
-
 def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append Gopher-style repetition signals (Arrow-batched hot path).
 
@@ -232,61 +209,26 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
       gram so the winner is deterministic.
 
     One Arrow-batched pandas UDF computes the integer counts in O(L)
-    per document (Counter passes); fractions are JVM F.round. Zero
-    shuffles. See the module docstring for the measured gap vs the
-    interpreted expression twin (~40x on the contract run).
+    per document (Counter passes); fractions are JVM F.round (so the
+    DuckDB oracle rounds the same way). Zero shuffles.
     """
-    out = df.withColumn("_rc", repetition_counts_udf(F.col(text_col)))
     rc = F.col("_rc")
-    return _repetition_fracs(
-        out, rc["n_lines"], rc["n_dup_lines"], rc["line_chars"],
-        rc["dup_line_chars"], rc["bi_cov"], rc["tri_cov"],
-        rc["n_chars"]).drop("_rc")
 
+    def nonzero(c: Column) -> Column:
+        return F.when(c > 0, c.cast("double")).otherwise(F.lit(1.0))
 
-def repetition_features_expr(df: DataFrame,
-                             text_col: str = "text") -> DataFrame:
-    """JVM expression twin of :func:`repetition_features` — identical
-    output columns, no Python workers required.
-
-    NOT the hot path: the inner filter-counts are O(L^2) per document
-    and higher-order array expressions evaluate interpreted
-    (CodegenFallback) — measured ~40x slower than the Arrow UDF on the
-    500-doc contract run. Equality with the UDF path is pinned by
-    test_repetition_expr_twin_matches_udf.
-    """
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    lines = F.filter(F.split(c, "\n"), lambda x: F.length(F.trim(x)) > 0)
-    n_lines = F.size(lines)
-    n_dup_lines = n_lines - F.size(F.array_distinct(lines))
-    line_chars = F.aggregate(lines, F.lit(0).cast("long"),
-                             lambda acc, x: acc + F.length(x))
-    dup_line_chars = F.aggregate(
-        lines, F.lit(0).cast("long"),
-        lambda acc, x: acc + F.when(
-            F.size(F.filter(lines, lambda y: y == x)) > 1,
-            F.length(x)).otherwise(F.lit(0)))
-
-    def top_gram_cov(n: int) -> Column:
-        grams = ngram_windows(c, n)
-        # (count, gram) max over DISTINCT grams; struct comparison is
-        # field-lexicographic = Python's max over (count, gram)
-        best = F.aggregate(
-            F.array_distinct(grams),
-            F.struct(F.lit(0).cast("int").alias("cnt"),
-                     F.lit("").alias("g")),
-            lambda acc, x: F.when(
-                F.struct(
-                    F.size(F.filter(grams, lambda y: y == x)).alias("cnt"),
-                    x.alias("g")) > acc,
-                F.struct(
-                    F.size(F.filter(grams, lambda y: y == x)).alias("cnt"),
-                    x.alias("g"))).otherwise(acc))
-        return best["cnt"].cast("long") * F.length(best["g"])
-
-    return _repetition_fracs(df, n_lines, n_dup_lines, line_chars,
-                             dup_line_chars, top_gram_cov(2),
-                             top_gram_cov(3), F.length(c))
+    nl, nc, nz = (nonzero(rc["n_lines"]), nonzero(rc["line_chars"]),
+                  nonzero(rc["n_chars"]))
+    return (df.withColumn("_rc", repetition_counts_udf(F.col(text_col)))
+            .withColumn("n_lines", rc["n_lines"])
+            .withColumn("dup_line_frac",
+                        F.round(rc["n_dup_lines"].cast("double") / nl, 6))
+            .withColumn("dup_line_char_frac",
+                        F.round(rc["dup_line_chars"].cast("double") / nc, 6))
+            .withColumn("top_bigram_char_frac", F.round(rc["bi_cov"] / nz, 6))
+            .withColumn("top_trigram_char_frac",
+                        F.round(rc["tri_cov"] / nz, 6))
+            .drop("_rc"))
 
 
 # ---------------------------------------------------------------------------
@@ -742,7 +684,6 @@ def curriculum_order(df: DataFrame, bands: int = 10, *,
                      quality_col: str = "quality_score",
                      id_col: str = "doc_id",
                      salt: str = "curriculum",
-                     strategy: str = "decomposed",
                      n_cuts: int = 256,
                      prefix_len: int = 2) -> DataFrame:
     """Easy-to-hard curriculum schedule: ntile ``bands`` over the
@@ -751,8 +692,7 @@ def curriculum_order(df: DataFrame, bands: int = 10, *,
     schedule carries no within-band ordering bias. Appends (band,
     position); position is the global training order.
 
-    ``strategy="decomposed"`` (the default, and the one the pipeline's
-    --curriculum-bands stage ships) never sorts the corpus on one task:
+    The schedule never sorts the corpus on one task:
 
     1. **Rank.** Quality is range-bucketed against broadcast
        ``percentile_approx`` cut points (``n_cuts`` buckets). Bucket
@@ -771,14 +711,14 @@ def curriculum_order(df: DataFrame, bands: int = 10, *,
 
     Every unpartitioned window in the plan runs over an aggregated
     offsets table (asserted by plancheck.unpartitioned_corpus_windows
-    in tests). ``strategy="window"`` keeps the two-global-window
-    rendition that pins the semantics; the two are equality-pinned in
-    test_curation_ops. Ties on quality are exact in both forms (the
-    in-bucket window carries the id tiebreak); heavily-tied scores only
-    skew bucket LOAD, bounded by the worst single value's frequency.
+    in tests). tests/test_curation_ops.py holds the two-global-window
+    rendition that pins the semantics, and asserts equality with it.
+    Ties on quality are exact (the in-bucket window carries the id
+    tiebreak); heavily-tied scores only skew bucket LOAD, bounded by the
+    worst single value's frequency.
 
     NULL quality orders last (both Spark's DESC and DuckDB's default),
-    implemented as bucket -1 in the decomposed form.
+    implemented as bucket -1.
     """
     if bands < 1:
         raise ValueError(f"bands must be >= 1, got {bands}")
@@ -786,17 +726,6 @@ def curriculum_order(df: DataFrame, bands: int = 10, *,
 
     key = F.md5(F.concat(F.lit(f"{salt}:"),
                          F.col(id_col).cast("string")))
-    if strategy == "window":
-        band = F.ntile(bands).over(
-            Window.orderBy(F.desc(quality_col), F.asc(id_col)))
-        pos = F.row_number().over(Window.orderBy("band", "__ck"))
-        return (df.withColumn("band", band)
-                .withColumn("__ck", key)
-                .withColumn("position", pos.cast("int"))
-                .drop("__ck"))
-    if strategy != "decomposed":
-        raise ValueError(f"strategy must be 'window' or 'decomposed', "
-                         f"got {strategy!r}")
     if n_cuts < 1:
         raise ValueError(f"n_cuts must be >= 1, got {n_cuts}")
 

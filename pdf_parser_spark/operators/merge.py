@@ -3,7 +3,7 @@
 Two physical strategies for the same logical operator (both reuse the shared
 pure-Python core, so their per-row semantics are identical by construction):
 
-1. ``extract_chunks`` — THE SCALE PATH (default). Exploits the per-turn
+1. ``extract_chunks`` — the windowed path (default). Exploits the per-turn
    decomposition theorem (core/merge.py docstring): tokenize + merge run
    fused inside ONE ``mapInPandas`` — embarrassingly parallel, no grouping of
    raw text, no conversation ever materialized in one task. The only shuffle
@@ -15,13 +15,16 @@ pure-Python core, so their per-row semantics are identical by construction):
    map stage scales linearly with input splits; window shuffle moves only
    extracted chunks.
 
-2. ``extract_chunks_grouped`` — the faithful-orchestration path, mirroring
-   the reference's per-document loop (reference process_pdf_with_chunks,
-   pdf_parser.py:311-347): ``groupBy(conv_id).applyInPandas`` over raw
-   turns, whole conversation merged sequentially in one task. Used in tests
-   as a second, independently-routed implementation to cross-check the scale
-   path; at scale it is skew-exposed (a 10M-turn conversation lands in one
-   task), which is exactly why the scale path exists.
+2. ``extract_chunks_bucketed`` — the window-free path for conversation-
+   complete partitions (a table bucketed by conv_id and written sorted by
+   (conv_id, turn_idx)): a pure map job that runs the oracle's
+   per-conversation routine in-task. ``extract_chunks_auto`` chooses
+   between the two.
+
+tests/test_spark_equality.py holds a third, independently-routed
+rendition (``groupBy(conv_id).applyInPandas``, mirroring the reference's
+per-document loop, reference pdf_parser.py:311-347) as a cross-check of
+the windowed path.
 
 Output schema (the ``extracted`` table):
   conv_id string, chunk_idx long, turn_idx int, chunk_type string,
@@ -40,8 +43,8 @@ from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from pdf_parser_spark.config import ExtractionConfig
-from pdf_parser_spark.core.blocks import tokenize_turn, tokenize_turn_stats
-from pdf_parser_spark.core.merge import merge_blocks_to_chunks, merge_turn
+from pdf_parser_spark.core.blocks import tokenize_turn_stats
+from pdf_parser_spark.core.merge import merge_turn
 from pdf_parser_spark.operators.boilerplate import REPEATED_COL, with_repeated_lines
 
 CHUNK_FIELDS = [
@@ -368,32 +371,3 @@ def extract_chunks_auto(transcripts: DataFrame,
     out.extraction_route = route
     return out
 
-
-def extract_chunks_grouped(transcripts: DataFrame,
-                           cfg: ExtractionConfig = ExtractionConfig()) -> DataFrame:
-    """Faithful-orchestration path: whole conversation per task.
-
-    groupBy(conv_id).applyInPandas — sequential within a conversation,
-    parallel across conversations (exactly the reference's document loop,
-    distributed). Cross-checks the scale path in tests.
-    """
-    src = with_repeated_lines(_drop_null_keys(transcripts), cfg)
-
-    def merge_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx")
-        conv_id = pdf["conv_id"].iloc[0]
-        repeated = _as_repeated(pdf[REPEATED_COL].iloc[0])
-        blocks = []
-        for _, r in pdf.iterrows():
-            blocks.extend(tokenize_turn(int(r["turn_idx"]), r["text"],
-                                        r["tool"], cfg, repeated))
-        rows = []
-        for idx, c in enumerate(merge_blocks_to_chunks(blocks, cfg)):
-            rows.append((conv_id, idx, c["page"] - 1, c["chunk_type"],
-                         c["text"], c["char_count"], c["block_count"],
-                         c["block_indices"], c["table_index"],
-                         c["image_index"], c["table_cells"]))
-        return pd.DataFrame(rows, columns=[f.name for f in CHUNK_FIELDS])
-
-    return (src.select("conv_id", "turn_idx", "text", "tool", REPEATED_COL)
-            .groupBy("conv_id").applyInPandas(merge_conv, CHUNK_SCHEMA))

@@ -194,7 +194,7 @@ THUMBNAIL_SCHEMA = StructType([
 def _pil_decoder(payload: bytes):
     """PIL decoder for non-PNG formats (gated — pillow absent in this
     container; vendoring attempted rounds 3-4: no outbound network, see
-    tests/test_iceberg_gate.py docstring). Returns an object with the
+    the environment-gate log in BASELINE.md). Returns an object with the
     ``.size`` / ``.convert`` / ``.resize`` / ``.tobytes`` protocol the
     thumbnail pipeline below drives."""
     import io

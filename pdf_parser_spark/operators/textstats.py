@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StringType
+from pyspark.sql.types import StringType
 
 # tokenization is ASCII-whitespace EVERYWHERE in this engine: JVM split
 # on \s+ (Java: ASCII), DuckDB string_split_regex '\s+' (RE2: ASCII), and
@@ -155,39 +155,6 @@ def _lang_id_series(s: pd.Series) -> pd.Series:
 lang_id_udf = pandas_udf(_lang_id_series, StringType())
 
 
-def lang_id_expr(col: Column) -> Column:
-    """JVM twin of :func:`lang_id_py` — a no-Python-workers fallback.
-
-    Same decision procedure, zero Python: CJK codepoint share via
-    regexp_count, stopword votes via a filtered token array per language,
-    and the (count, lang) tie-break as a single ``greatest`` over structs
-    (struct ordering is field-lexicographic, exactly Python's
-    ``max(counts, key=lambda k: (counts[k], k))``). Equality with the
-    pure-Python oracle is pinned row-for-row by
-    test_lang_id_expr_matches_python.
-
-    NOT the hot path: measured together with :func:`fingerprint_expr` on
-    646k chunks, the expression twins ran ~8x SLOWER than the Arrow-
-    batched UDFs (32-34 s vs ~4 s, interleaved runs, identical outputs) —
-    higher-order array expressions evaluate interpreted (CodegenFallback)
-    with per-element boxing, while the UDF path is C-speed hashlib/str
-    ops behind one Arrow transfer. Kept because it needs no Python
-    workers on the executors; :func:`text_statistics` uses the UDFs."""
-    c = F.coalesce(col, F.lit(""))
-    n_chars = F.length(c)
-    cjk = F.regexp_count(c, F.lit("[一-鿿]"))
-    toks = tokens_array(F.lower(c))
-    votes = F.greatest(*[
-        F.struct(
-            F.size(F.filter(toks, lambda t: t.isin(*markers))).alias("c"),
-            F.lit(lang).alias("l"))
-        for lang, markers in _LANG_MARKERS.items()])
-    return (F.when(n_chars == 0, F.lit("und"))
-            .when(cjk.cast("double") / n_chars > 0.05, F.lit("zh"))
-            .when(votes["c"] > 0, votes["l"])
-            .otherwise(F.lit("und")))
-
-
 # --- fingerprinting ---
 
 
@@ -217,29 +184,6 @@ def _fingerprint_series(s: pd.Series) -> pd.Series:
 fingerprint_udf = pandas_udf(_fingerprint_series, StringType())
 
 
-def fingerprint_expr(col: Column, window: int = 8) -> Column:
-    """JVM twin of :func:`fingerprint_py` — a no-Python-workers fallback.
-
-    The winnowing min is order-compatible because md5 hex strings compare
-    lexicographically the same in Python and the JVM (both ASCII). Spans
-    are ``transform`` over a start-index ``sequence`` with ``slice`` +
-    ``concat_ws`` + built-in ``md5`` (UTF-8, identical to hashlib), then
-    ``array_min``. The pure-Python twin remains the pytest/DuckDB oracle;
-    equality is pinned row-for-row by test_fingerprint_expr_matches_python.
-
-    NOT the hot path — see the measurement note on :func:`lang_id_expr`:
-    the O(tokens x window) slice/concat/md5 chain inside ``transform``
-    runs interpreted (higher-order functions are CodegenFallback) and
-    measured ~8x slower than the Arrow-batched UDF on 646k chunks."""
-    toks = tokens_array(col)
-    n = F.size(toks)
-    starts = F.sequence(F.lit(0), F.greatest(n - window, F.lit(0)))
-    span_md5 = F.transform(
-        starts, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1,
-                                                         window))))
-    return F.when(n == 0, F.lit("")).otherwise(F.array_min(span_md5))
-
-
 def md5_fingerprint(col: Column, length: int = 16) -> Column:
     """Exact-content fingerprint as a JVM expression — built-in md5 matches
     hashlib (reference chunk ids: md5(...)[:16], gea_qa_agent.py:109)."""
@@ -249,11 +193,12 @@ def md5_fingerprint(col: Column, length: int = 16) -> Column:
 def text_statistics(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Full text-analysis projection: quality + lang + fingerprints.
 
-    lang-ID and the winnowing fingerprint stay on the Arrow-batched
-    pandas UDFs: the Catalyst expression twins (:func:`lang_id_expr`,
-    :func:`fingerprint_expr`) were measured ~8x slower on 646k chunks
-    (higher-order array expressions run interpreted), so "UDFs are the
-    slow path" is inverted here — measured, not assumed."""
+    lang-ID and the winnowing fingerprint are Arrow-batched pandas UDFs,
+    the only path: Catalyst higher-order-array renditions of both were
+    measured ~8x slower on 646k chunks (32-34 s vs ~4 s, identical
+    outputs) because higher-order array expressions run interpreted
+    (CodegenFallback) with per-element boxing, so "UDFs are the slow
+    path" is inverted here — measured, not assumed."""
     return (quality_features(df, text_col)
             .withColumn("lang_pred", lang_id_udf(F.col(text_col)))
             .withColumn("fingerprint", fingerprint_udf(F.col(text_col)))

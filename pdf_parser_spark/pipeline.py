@@ -119,13 +119,3 @@ def full_metrics(transcripts: DataFrame, chunks: DataFrame,
              else cleaning_metrics(transcripts, cfg))
     return extraction_metrics(chunks).join(stats, "conv_id", "full")
 
-
-def corpus_metrics(chunks: DataFrame) -> DataFrame:
-    """Whole-run summary, mirroring generate_summary_report
-    (reference process_gea_pdfs.py:169-230)."""
-    return chunks.agg(
-        F.countDistinct("conv_id").alias("total_conversations"),
-        F.count("*").alias("total_chunks"),
-        F.sum("char_count").alias("total_chars"),
-        F.avg("char_count").alias("avg_chars_per_chunk"),
-    )

@@ -4006,6 +4006,38 @@ FROM feat GROUP BY source, lang
 """
 
 
+# Process-private scratch roots the lakehouse entries cache their built
+# tables under, keyed by the registry entry whose builder creates them
+# (see _cow_merged_dir's caching discipline). Every builder and bench.py
+# take the path from lakehouse_scratch_dir, so the root bench.py clears
+# before each timed pass (making every invocation pay the FULL build +
+# commit + maintenance flow, not a cached read) is always the one the
+# builder caches under.
+LAKEHOUSE_SCRATCH_PREFIXES: dict[str, str] = {
+    "docs_cow_merge": "pdf_parser_spark_cow_",
+    "docs_cow_wap": "pdf_parser_spark_wap_",
+    "docs_cow_mor_merge": "pdf_parser_spark_cowmor_",
+    "docs_cow_append": "pdf_parser_spark_cowapp_",
+    "docs_cow_evolution": "pdf_parser_spark_cowevo_",
+    "docs_store_bloom_lookup": "pdf_parser_spark_cowbloom_",
+    "docs_dup_probe_maintained": "pdf_parser_spark_dupidx_",
+}
+
+
+def lakehouse_scratch_dir(entry: str, sf: str) -> str | None:
+    """The scratch root ``entry`` caches under for scale dir ``sf``
+    (None for entries with no cached scratch) — path computation only."""
+    import hashlib
+    import os
+    import tempfile
+    prefix = LAKEHOUSE_SCRATCH_PREFIXES.get(entry)
+    if prefix is None:
+        return None
+    return os.path.join(tempfile.gettempdir(),
+                        prefix + hashlib.md5(sf.encode()).hexdigest()[:8]
+                        + f"_{os.getpid()}")
+
+
 def _cow_merged_dir(spark, sf):
     """Build (fresh each call — deterministic) a copy-on-write table from
     ``documents`` and apply ONE CDC batch through the manifest/merge
@@ -4015,9 +4047,7 @@ def _cow_merged_dir(spark, sf):
     set algebra, so the WHOLE mutation path — footer-stats pruning,
     affected-file rewrite, by-name file carry, manifest commit — is
     value-hash-checked, not just pytest-gated."""
-    import hashlib
     import os
-    import tempfile
 
     from pdf_parser_spark.sources.cowtable import create_table, merge_into
 
@@ -4025,10 +4055,7 @@ def _cow_merged_dir(spark, sf):
     # would let a concurrent run (pytest vs oracle_check) rmtree a table
     # the other is mid-merge on, and an in-process rebuild would strand
     # lazy DataFrames pointing at the previous build's uuid-named files.
-    d = os.path.join(tempfile.gettempdir(),
-                     "pdf_parser_spark_cow_"
-                     + hashlib.md5(sf.encode()).hexdigest()[:8]
-                     + f"_{os.getpid()}")
+    d = lakehouse_scratch_dir("docs_cow_merge", sf)
     if os.path.exists(d):
         import json
         try:  # complete iff the one CDC batch committed (version 2)
@@ -4069,9 +4096,7 @@ def _cow_wap_dir(spark, sf):
     main AND the branch-write → ancestor-checked publish path produces
     exactly the plain-merge state. Same process-private caching
     discipline as _cow_merged_dir."""
-    import hashlib
     import os
-    import tempfile
 
     from pdf_parser_spark.sources.cowtable import (create_branch,
                                                    create_table,
@@ -4079,10 +4104,7 @@ def _cow_wap_dir(spark, sf):
                                                    fast_forward,
                                                    merge_into)
 
-    d = os.path.join(tempfile.gettempdir(),
-                     "pdf_parser_spark_wap_"
-                     + hashlib.md5(sf.encode()).hexdigest()[:8]
-                     + f"_{os.getpid()}")
+    d = lakehouse_scratch_dir("docs_cow_wap", sf)
     if os.path.exists(d):
         import json
         try:  # complete iff published (main moved) and no branch remains
@@ -4214,17 +4236,12 @@ def _cow_mor_dir(spark, sf):
     rewritten, masks applied at read. Oracle-equality against the SAME
     SQL as the cow entries value-hash-checks the whole masked-read
     path (file-seq rule, delete-file join, re-insert liveness)."""
-    import hashlib
     import json
     import os
-    import tempfile
 
     from pdf_parser_spark.sources.cowtable import create_table, merge_into
 
-    d = os.path.join(tempfile.gettempdir(),
-                     "pdf_parser_spark_cowmor_"
-                     + hashlib.md5(sf.encode()).hexdigest()[:8]
-                     + f"_{os.getpid()}")
+    d = lakehouse_scratch_dir("docs_cow_mor_merge", sf)
     if os.path.exists(d):
         try:
             with open(os.path.join(d, "manifest.json")) as fh:
@@ -4278,19 +4295,14 @@ def docs_cow_append(spark, sf):
     # create, the other half via cowtable.append_rows — every v1 file
     # carried by name, zero pruning/rewrite work; the read-back equality
     # value-hash-checks the append path against the pristine input
-    import hashlib
     import json
     import os
-    import tempfile
 
     from pdf_parser_spark.sources.cowtable import (append_rows,
                                                    create_table,
                                                    read_table)
 
-    d = os.path.join(tempfile.gettempdir(),
-                     "pdf_parser_spark_cowapp_"
-                     + hashlib.md5(sf.encode()).hexdigest()[:8]
-                     + f"_{os.getpid()}")
+    d = lakehouse_scratch_dir("docs_cow_append", sf)
     complete = False
     try:  # complete iff the append committed (version 2); a corrupt or
         with open(os.path.join(d, "manifest.json")) as fh:  # truncated
@@ -4322,18 +4334,13 @@ def _cow_evolved_dir(spark, sf):
     oracle recomputes the evolved state as pure SQL, so the evolution
     read path (manifest-schema resolution over files that predate the
     column) is value-hash-checked."""
-    import hashlib
     import json
     import os
-    import tempfile
 
     from pdf_parser_spark.sources.cowtable import (add_column, create_table,
                                                    merge_into)
 
-    d = os.path.join(tempfile.gettempdir(),
-                     "pdf_parser_spark_cowevo_"
-                     + hashlib.md5(sf.encode()).hexdigest()[:8]
-                     + f"_{os.getpid()}")
+    d = lakehouse_scratch_dir("docs_cow_evolution", sf)
     if os.path.exists(d):
         try:
             with open(os.path.join(d, "manifest.json")) as fh:
@@ -4378,17 +4385,12 @@ def _cow_bloom_dir(spark, sf):
     sidecars on the key (sources/cowtable bloom_cols) — the layout the
     content-addressed embedding store uses, where min/max bounds
     degenerate (hash keys span every file's range)."""
-    import hashlib
     import json
     import os
-    import tempfile
 
     from pdf_parser_spark.sources.cowtable import create_table
 
-    d = os.path.join(tempfile.gettempdir(),
-                     "pdf_parser_spark_cowbloom_"
-                     + hashlib.md5(sf.encode()).hexdigest()[:8]
-                     + f"_{os.getpid()}")
+    d = lakehouse_scratch_dir("docs_store_bloom_lookup", sf)
     if os.path.exists(d):
         try:
             with open(os.path.join(d, "manifest.json")) as fh:
@@ -4451,19 +4453,14 @@ def _dup_index_dir(spark, sf):
     entire maintenance path. Same process-private caching discipline as
     _cow_merged_dir. Geometry: 4 hashes x 2 bands, the DuckDB-
     recomputable family of DOCS_MINHASH_SQL."""
-    import hashlib
     import json
     import os
-    import tempfile
 
     from pdf_parser_spark.sources.cowtable import create_table, merge_into
     from pdf_parser_spark.sources.dedup_index import (build_dedup_index,
                                                       refresh_dedup_index)
 
-    base = os.path.join(tempfile.gettempdir(),
-                        "pdf_parser_spark_dupidx_"
-                        + hashlib.md5(sf.encode()).hexdigest()[:8]
-                        + f"_{os.getpid()}")
+    base = lakehouse_scratch_dir("docs_dup_probe_maintained", sf)
     chunks, idx = os.path.join(base, "chunks"), os.path.join(base, "idx")
     if os.path.exists(base):
         try:  # complete iff the index reflects the post-CDC version 2
@@ -4547,34 +4544,6 @@ GROUP BY 1, 2
 
 
 DOCS_DUP_PROBE_SQL = _dup_probe_sql()
-
-
-# Process-private scratch roots the lakehouse entries cache their built
-# tables under (see _cow_merged_dir's caching discipline). bench.py
-# clears an entry's root before each timed pass so every invocation
-# includes the FULL build + commit + maintenance flow — otherwise the
-# per-query min would time only the cached read and a regression in the
-# merge machinery would be invisible.
-LAKEHOUSE_SCRATCH_PREFIXES: dict[str, str] = {
-    "docs_cow_merge": "pdf_parser_spark_cow_",
-    "docs_cow_mor_merge": "pdf_parser_spark_cowmor_",
-    "docs_dup_probe_maintained": "pdf_parser_spark_dupidx_",
-}
-
-
-def lakehouse_scratch_dir(entry: str, sf: str) -> str | None:
-    """The scratch root ``entry`` caches under for scale dir ``sf``
-    (None for entries with no cached scratch) — path computation only,
-    mirrors the builders' naming exactly."""
-    import hashlib
-    import os
-    import tempfile
-    prefix = LAKEHOUSE_SCRATCH_PREFIXES.get(entry)
-    if prefix is None:
-        return None
-    return os.path.join(tempfile.gettempdir(),
-                        prefix + hashlib.md5(sf.encode()).hexdigest()[:8]
-                        + f"_{os.getpid()}")
 
 
 # ---------------------------------------------------------------------------

@@ -42,8 +42,8 @@ rebuilt on plain parquet:
 Reference analog: none (the reference mutates an in-process dict,
 pdf_parser.py keeps everything in memory); this is the operate-at-scale
 tier the 10^12-turn target implies, and the honest stand-in for the
-environment-blocked `iceberg-spark-runtime` jar (tests/test_iceberg_gate
-documents the attempt) — same contracts, measured locally.
+environment-blocked `iceberg-spark-runtime` jar (the environment-gate log
+in BASELINE.md documents the attempt) — same contracts, measured locally.
 """
 
 from __future__ import annotations

@@ -3,10 +3,9 @@ redaction, deterministic global shuffle, and sequence packing.
 
 The driver-contract twin (test_driver_contract.py) already checks the
 five query entries against DuckDB; these tests pin the operator-level
-semantics directly — twin equality for the repetition paths, hand-
-computed examples, and the packing/shuffle invariants that the SQL
-oracle can't state (determinism across partitionings, stream
-contiguity)."""
+semantics directly — hand-computed examples, and the packing/shuffle
+invariants that the SQL oracle can't state (determinism across
+partitionings, stream contiguity)."""
 
 from __future__ import annotations
 
@@ -17,8 +16,7 @@ from pdf_parser_spark.operators.curation import (decontaminate,
                                                  global_shuffle,
                                                  pack_sequences, pii_redact,
                                                  repetition_counts_py,
-                                                 repetition_features,
-                                                 repetition_features_expr)
+                                                 repetition_features)
 
 REP_COLS = ["n_lines", "dup_line_frac", "dup_line_char_frac",
             "top_bigram_char_frac", "top_trigram_char_frac"]
@@ -49,10 +47,17 @@ def _rows(df):
             for r in df.select("doc_id", *REP_COLS).collect()}
 
 
-def test_repetition_expr_twin_matches_udf(tricky):
-    got_udf = _rows(repetition_features(tricky))
-    got_expr = _rows(repetition_features_expr(tricky))
-    assert got_udf == got_expr
+def test_repetition_features_match_counts_py(tricky):
+    # the UDF's JVM-side fractions over the edge rows equal the same
+    # fractions derived from the pure-Python counts
+    def fracs(text):
+        n_lines, n_dup, lc, dc, bi, tri, n_chars = repetition_counts_py(text)
+        nl, nc, nz = (max(n_lines, 1), max(lc, 1), max(n_chars, 1))
+        return (n_lines, n_dup / nl, dc / nc, bi / nz, tri / nz)
+
+    got = _rows(repetition_features(tricky))
+    for doc_id, text in TRICKY_DOCS:
+        assert got[doc_id] == pytest.approx(fracs(text), abs=1e-6), doc_id
 
 
 def test_repetition_counts_py_hand_examples():
@@ -424,10 +429,28 @@ def test_gumbel_topk_deterministic_and_salted(spark):
 # --- curriculum_order: decomposed (scale-safe) vs window (semantics) -------
 
 
-def _curriculum_pairs(df, **kw):
+def curriculum_window(df, bands=10):
+    """Reference rendition of curriculum_order (default columns and
+    salt): two corpus-global windows (ntile over quality, then
+    row_number over the band and the seed-keyed shuffle key). It pins
+    the semantics the decomposed form must reproduce; each window sorts
+    the whole corpus on one task."""
+    from pyspark.sql.window import Window
+    key = F.md5(F.concat(F.lit("curriculum:"),
+                         F.col("doc_id").cast("string")))
+    band = F.ntile(bands).over(
+        Window.orderBy(F.desc("quality_score"), F.asc("doc_id")))
+    pos = F.row_number().over(Window.orderBy("band", "__ck"))
+    return (df.withColumn("band", band)
+            .withColumn("__ck", key)
+            .withColumn("position", pos.cast("int"))
+            .drop("__ck"))
+
+
+def _curriculum_pairs(df, window=False, **kw):
     from pdf_parser_spark.operators.curation import curriculum_order
-    return {r.doc_id: (r.band, r.position)
-            for r in curriculum_order(df, **kw).collect()}
+    out = (curriculum_window if window else curriculum_order)(df, **kw)
+    return {r.doc_id: (r.band, r.position) for r in out.collect()}
 
 
 def test_curriculum_decomposed_equals_window(spark):
@@ -439,7 +462,7 @@ def test_curriculum_decomposed_equals_window(spark):
     df = spark.createDataFrame(rows, "doc_id int, quality_score double")
     for bands in (1, 7, 10):
         dec = _curriculum_pairs(df, bands=bands)
-        win = _curriculum_pairs(df, bands=bands, strategy="window")
+        win = _curriculum_pairs(df, bands=bands, window=True)
         assert dec == win
     # decomposition parameters move only load, never answers
     assert _curriculum_pairs(df, n_cuts=1) \
@@ -454,7 +477,7 @@ def test_curriculum_decomposed_handles_ties_and_nulls(spark):
     rows = [(i, float(i % 3)) for i in range(60)] + [(100, None), (101, None)]
     df = spark.createDataFrame(rows, "doc_id int, quality_score double")
     dec = _curriculum_pairs(df, bands=5)
-    win = _curriculum_pairs(df, bands=5, strategy="window")
+    win = _curriculum_pairs(df, bands=5, window=True)
     assert dec == win
     assert dec[100][0] == 5 and dec[101][0] == 5   # nulls in the last band
 
@@ -464,7 +487,7 @@ def test_curriculum_fewer_rows_than_bands(spark):
     df = spark.createDataFrame([(1, 0.9), (2, 0.5), (3, 0.1)],
                                "doc_id int, quality_score double")
     dec = _curriculum_pairs(df, bands=10)
-    win = _curriculum_pairs(df, bands=10, strategy="window")
+    win = _curriculum_pairs(df, bands=10, window=True)
     assert dec == win
     assert sorted(b for b, _ in dec.values()) == [1, 2, 3]
 
@@ -477,7 +500,7 @@ def test_curriculum_decomposed_plan_has_no_corpus_global_window(spark):
     dec = curriculum_order(df)
     assert unpartitioned_corpus_windows(dec) == []
     # sanity: the checker DOES flag the window rendition's global sorts
-    win = curriculum_order(df, strategy="window")
+    win = curriculum_window(df)
     assert unpartitioned_corpus_windows(win) != []
 
 
@@ -555,7 +578,5 @@ def test_curriculum_rejects_bad_params(spark):
     df = spark.createDataFrame([(1, 0.5)], "doc_id int, quality_score double")
     with pytest.raises(ValueError, match="bands"):
         curriculum_order(df, bands=0)
-    with pytest.raises(ValueError, match="strategy"):
-        curriculum_order(df, strategy="nope")
     with pytest.raises(ValueError, match="n_cuts"):
         curriculum_order(df, n_cuts=0)

@@ -4,20 +4,60 @@ The north-rule correctness gate: the distributed extraction must match the
 reference-semantics oracle exactly — every chunk's text, char_count,
 lineage indices, and type, under stable (conv_id, turn_idx, chunk_idx)
 ordering — in every tokenizer/heuristic mode. The scale path and the
-grouped path take entirely different execution routes (map-only + window
-vs groupBy+applyInPandas), so their agreement with the oracle and each
-other is strong evidence of the orchestration's correctness.
+grouped reference rendition below take entirely different execution
+routes (map-only + window vs groupBy+applyInPandas), so their agreement
+with the oracle and each other is strong evidence of the orchestration's
+correctness.
 """
 
 from __future__ import annotations
 
 import pytest
 
+import pandas as pd
+
 from pdf_parser_spark.config import (CLEANING_CONFIG, DEFAULT_CONFIG,
                                      PARAGRAPH_CONFIG, ExtractionConfig)
+from pdf_parser_spark.core.blocks import tokenize_turn
+from pdf_parser_spark.core.merge import merge_blocks_to_chunks
 from pdf_parser_spark.core.oracle import extract_many
-from pdf_parser_spark.operators.merge import extract_chunks, extract_chunks_grouped
+from pdf_parser_spark.operators.boilerplate import (REPEATED_COL,
+                                                    with_repeated_lines)
+from pdf_parser_spark.operators.merge import (CHUNK_FIELDS, CHUNK_SCHEMA,
+                                              _as_repeated, _drop_null_keys,
+                                              extract_chunks)
 from pdf_parser_spark.sources.synth import generate_transcripts
+
+
+def extract_chunks_grouped(transcripts, cfg=ExtractionConfig()):
+    """Reference rendition: whole conversation per task.
+
+    groupBy(conv_id).applyInPandas — sequential within a conversation,
+    parallel across conversations (exactly the reference's document loop,
+    reference pdf_parser.py:311-347, distributed). Skew-exposed at scale
+    (a 10M-turn conversation lands in one task), so it is kept here only
+    as an independently-routed cross-check of the windowed path.
+    """
+    src = with_repeated_lines(_drop_null_keys(transcripts), cfg)
+
+    def merge_conv(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("turn_idx")
+        conv_id = pdf["conv_id"].iloc[0]
+        repeated = _as_repeated(pdf[REPEATED_COL].iloc[0])
+        blocks = []
+        for _, r in pdf.iterrows():
+            blocks.extend(tokenize_turn(int(r["turn_idx"]), r["text"],
+                                        r["tool"], cfg, repeated))
+        rows = []
+        for idx, c in enumerate(merge_blocks_to_chunks(blocks, cfg)):
+            rows.append((conv_id, idx, c["page"] - 1, c["chunk_type"],
+                         c["text"], c["char_count"], c["block_count"],
+                         c["block_indices"], c["table_index"],
+                         c["image_index"], c["table_cells"]))
+        return pd.DataFrame(rows, columns=[f.name for f in CHUNK_FIELDS])
+
+    return (src.select("conv_id", "turn_idx", "text", "tool", REPEATED_COL)
+            .groupBy("conv_id").applyInPandas(merge_conv, CHUNK_SCHEMA))
 
 
 def _norm_rows(rows) -> list[tuple]:
