@@ -95,9 +95,12 @@ def main() -> int:
     # corpus (observed: the Gopher repetition SQL at a 10x-sf0.1 tiling)
     # can otherwise grow past physical RAM and get the whole process
     # OOM-killed mid-sweep. With a limit + temp dir DuckDB spills
-    # instead; the Spark side already spills on its own.
+    # instead; the Spark side already spills on its own. The limit is
+    # half of physical RAM, capped at 48 GB.
     import tempfile
-    con.execute("SET memory_limit='48GB'")
+    ram_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+              >> 20)
+    con.execute(f"SET memory_limit='{min(48 << 10, ram_mb // 2)}MB'")
     con.execute(f"SET temp_directory='"
                 f"{tempfile.mkdtemp(prefix='oracle_duck_spill_')}'")
     for t in TABLES:

@@ -11,13 +11,18 @@ rebuilt on plain parquet:
   (version -> file list + applied-batch ledger); readers load exactly
   the listed files, so writers never race them;
 - ``merge_into`` applies an (op, key, row) change batch by REWRITING
-  ONLY AFFECTED FILES: per-file key min/max footer statistics are read
-  DISTRIBUTED (pyarrow over a parallelized file list — at 100 TB that is
-  ~10^6 footers, a metadata-only map job), range-matched against the
-  batch's key bounds per file, and only intersecting files are re-read;
-  survivors of those files anti-join the batch keys, upserts append —
-  every untouched file is carried into the new snapshot BY NAME, zero
-  bytes moved;
+  ONLY AFFECTED FILES: per-file key min/max bounds, cached in the
+  manifest, are range-matched against the batch's keys, and only
+  intersecting files are re-read; survivors of those files anti-join
+  the batch keys, upserts append — every untouched file is carried
+  into the new snapshot BY NAME, zero bytes moved;
+- every writer (``create_table``, ``merge_into``, ``append_rows``,
+  ``compact_table``, ``rewrite_masked_files``) records its new files'
+  key, column and bloom stats in ONE driver-side footer pass
+  (``_register_new_files``: one footer open per new file, no Spark
+  job); ``file_key_bounds``' distributed footer job (pyarrow over a
+  parallelized file list) is only the reader fallback for files whose
+  stats the manifest does not cache;
 - ``merge_into(..., strategy="mor")`` is the MERGE-ON-READ twin
   (Iceberg v2 equality deletes): the commit rewrites NOTHING — batch
   keys land in a tiny delete file ``(key, __seq)``, upserts append as
@@ -199,19 +204,22 @@ def create_table(spark: SparkSession, df: DataFrame, table_dir: str,
                  key_col: str, *, extra: dict | None = None,
                  stats_cols: list[str] | None = None,
                  bloom_cols: list[str] | None = None) -> dict:
-    """Snapshot v1 from ``df``. ``key_col`` is the merge key; rows with
-    NULL keys are rejected up front (a NULL merge key can never match
-    and would silently survive every delete). ``extra``: caller fields
+    """Snapshot v1 from ``df``. ``key_col`` is the merge key; NULL keys
+    (a NULL merge key can never match and would silently survive every
+    delete) and duplicate keys are rejected. ``extra``: caller fields
     merged into the SAME manifest commit (e.g. maintenance's
-    src_version) — an init is never split across two commits."""
+    src_version) — an init is never split across two commits.
+
+    ``df`` runs ONCE: its plan (often an extraction or an embedding
+    UDF) is written first, then one aggregate over the key column of
+    the WRITTEN files checks it. A rejected input leaves no manifest
+    and no data file (and no table directory, if this call made it).
+    Key, column and bloom stats of the new files are recorded on the
+    driver by ``_register_new_files``, like every other writer; a
+    zero-row input commits a v1 with no files that reads as an empty
+    table of ``df``'s schema."""
     if os.path.exists(_manifest_path(table_dir)):
         raise ValueError(f"{table_dir} already holds a cow table")
-    if df.where(F.col(key_col).isNull()).limit(1).count():
-        raise ValueError(f"NULL {key_col} rows cannot be merge targets")
-    if (df.groupBy(key_col).count().where(F.col("count") > 1)
-            .limit(1).count()):
-        raise ValueError(f"duplicate {key_col} values in the initial "
-                         "data — a merge key identifies one row")
     reserved = {"key_col", "version", "applied", "schema", "snapshots",
                 "stats", "dropped", "seq", "stats_cols", "colstats",
                 "bloom_cols", "bloomstats", "refs", "branches",
@@ -219,22 +227,49 @@ def create_table(spark: SparkSession, df: DataFrame, table_dir: str,
     if extra and reserved & set(extra):
         raise ValueError(f"extra fields clash with manifest fields: "
                          f"{sorted(reserved & set(extra))}")
+    df.select(key_col)  # an unknown key column fails here, before writing
+    created = not os.path.exists(table_dir)
     os.makedirs(table_dir, exist_ok=True)
-    files = _write_data_files(df, table_dir, "v1")
-    manifest = {"key_col": key_col, "version": 1, "applied": [],
-                "commit_seq": 0, "last_snapshot_id": 1,
-                "schema": df.schema.json(),
-                "seq": {f: 1 for f in files},
-                "snapshots": {"1": {"files": files,
-                                    "schema": df.schema.json()}},
-                **({"stats_cols": list(stats_cols)} if stats_cols else {}),
-                **({"bloom_cols": list(bloom_cols)} if bloom_cols else {}),
-                **(extra or {})}
-    _record_stats(manifest,
-                  file_key_bounds(spark, table_dir, files, key_col))
-    _record_col_stats(manifest, files, table_dir)
-    _record_bloom_stats(manifest, files, table_dir)
-    _commit(table_dir, manifest)
+    files: list[str] = []
+    try:
+        files = _write_data_files(df, table_dir, "v1")
+        if files:
+            probe = (spark.read.schema(df.schema)
+                     .parquet(*[os.path.join(table_dir, f) for f in files])
+                     .agg(F.count(F.when(F.col(key_col).isNull(), True))
+                          .alias("null_keys"),
+                          F.count(F.lit(1)).alias("n"),
+                          F.countDistinct(key_col).alias("n_keys"))
+                     .collect()[0])
+            if probe["null_keys"]:
+                raise ValueError(
+                    f"NULL {key_col} rows cannot be merge targets")
+            if probe["n_keys"] < probe["n"]:
+                raise ValueError(f"duplicate {key_col} values in the "
+                                 "initial data — a merge key identifies "
+                                 "one row")
+        manifest = {"key_col": key_col, "version": 1, "applied": [],
+                    "commit_seq": 0, "last_snapshot_id": 1,
+                    "schema": df.schema.json(),
+                    **({"stats_cols": list(stats_cols)}
+                       if stats_cols else {}),
+                    **({"bloom_cols": list(bloom_cols)}
+                       if bloom_cols else {}),
+                    **(extra or {})}
+        _register_new_files(manifest, table_dir, files, key_col)
+        manifest["seq"] = {f: 1 for f in files}
+        manifest["snapshots"] = {"1": {"files": files,
+                                       "schema": df.schema.json()}}
+        _commit(table_dir, manifest)
+    except BaseException:
+        if created:
+            shutil.rmtree(table_dir, ignore_errors=True)
+        else:
+            for f in files:
+                p = os.path.join(table_dir, f)
+                if os.path.exists(p):
+                    os.remove(p)
+        raise
     return manifest
 
 
@@ -661,8 +696,11 @@ def file_key_bounds(spark: SparkSession, table_dir: str,
     """Per-file (file, kmin, kmax, rows): from the manifest's cached
     stats when present, else from parquet FOOTERS — a distributed
     metadata pass (pyarrow in mapPartitions over the file list; no data
-    pages are read), the scale twin of Iceberg's manifest column stats.
-    NULL bounds (stats missing) mark the file un-prunable."""
+    pages are read). Every writer caches its new files' stats at commit
+    (``_register_new_files``), so the footer pass is the READER
+    fallback: files whose bounds were not cacheable (non-JSON key
+    types, missing statistics) or manifests written before stats were
+    cached. NULL bounds (stats missing) mark the file un-prunable."""
     cached = (manifest or {}).get("stats", {})
     out = [{"file": f, "kmin": cached[f][0], "kmax": cached[f][1],
             "rows": cached[f][2]} for f in files if f in cached]
@@ -725,8 +763,9 @@ def merge_into(spark: SparkSession, table_dir: str, changes: DataFrame,
     keys in one batch are rejected (last-wins needs an ordering the
     caller should make explicit by pre-collapsing the batch).
 
-    ``strategy='cow'`` (default) scale shape: one footer-stats metadata
-    job over the file list + one scan of ONLY the affected files
+    ``strategy='cow'`` (default) scale shape: a lookup of the per-file
+    key bounds cached in the manifest (a footer job only for files
+    without cached stats) + one scan of ONLY the affected files
     (anti-join on key against the broadcast batch) + the batch append.
     Untouched files move by name.
 
@@ -941,7 +980,9 @@ def compact_table(spark: SparkSession, table_dir: str,
     key) + local sort) so their
     manifest colstats bounds come back tight — merge commits gradually
     widen them; compaction is where clustering is restored (Iceberg's
-    rewrite with sort order)."""
+    rewrite with sort order). The new files' stats are recorded on the
+    driver by ``_register_new_files`` (zero-row files dropped), the
+    same pass every writer uses."""
     from pdf_parser_spark.sources.compact import plan_n_files
     m = read_manifest(table_dir)
     seq0 = _seq(m)
@@ -967,10 +1008,7 @@ def compact_table(spark: SparkSession, table_dir: str,
     else:
         df = df.repartition(n_out)
     files = _write_data_files(df, table_dir, tag)
-    _record_stats(m, file_key_bounds(spark, table_dir, files,
-                                     m["key_col"]))
-    _record_col_stats(m, files, table_dir)
-    _record_bloom_stats(m, files, table_dir)
+    _register_new_files(m, table_dir, files, m["key_col"])
     m.setdefault("seq", {}).update({f: v for f in files})
     # compaction is ALSO the merge-on-read reconciler: masks are
     # materialized into the rewrite, so the new snapshot carries no

@@ -329,6 +329,9 @@ def wap_refresh_extracted(spark: SparkSession, src_dir: str, dst_dir: str,
     except BaseException:
         drop_branch(dst_dir, name)
         raise
+    # the version the refresh pinned: a src commit that landed after the
+    # read above is staged too, so the audits and the stamp must cover it
+    src_v = stats["src_version"]
     if stats.get("skipped"):
         drop_branch(dst_dir, name)
         if "changed_convs" in stats:  # caught up over no-data steps:

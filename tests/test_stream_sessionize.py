@@ -4,6 +4,8 @@ cross-batch state carry, and event-time-timeout session close."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -23,6 +25,16 @@ def _write(path, rows):
 
 def _sec(s):
     return T0 + dt.timedelta(seconds=s)
+
+
+def _order_by_mtime(inp, names):
+    """Spark's file stream source hands out files in modification-time
+    order; files written within one clock tick tie and then come in
+    directory-listing order. Strictly increasing mtimes make ``names``
+    the batch order."""
+    t0 = time.time() - len(names)
+    for i, name in enumerate(names):
+        os.utime(inp / name, (t0 + i, t0 + i))
 
 
 @pytest.fixture()
@@ -46,6 +58,7 @@ def session_run(spark, tmp_path):
         ("S2", _sec(100000)),                      # closes everything open
         ("B", _sec(150)),                          # LATE: behind watermark
     ])
+    _order_by_mtime(inp, ["f1.parquet", "f2.parquet", "f3.parquet"])
 
     stream = (spark.readStream.schema("user_id string, ts timestamp")
               .option("maxFilesPerTrigger", "1").parquet(str(inp)))
@@ -93,6 +106,7 @@ def test_nonzero_watermark_out_of_order_merge(spark, tmp_path):
     _write(str(inp / "f3.parquet"), [
         ("Z", _sec(100000)),                       # closes everything
     ])
+    _order_by_mtime(inp, ["f1.parquet", "f2.parquet", "f3.parquet"])
     stream = (spark.readStream.schema("user_id string, ts timestamp")
               .option("maxFilesPerTrigger", "1").parquet(str(inp)))
     q = (stream_sessionize(stream, gap_sec=1800, watermark="300 seconds")

@@ -236,3 +236,44 @@ def test_wap_publishes_through_join_pruned_fallback(spark, tables):
     assert "chunk_count_collapse" in out["audits"]
     assert _digest(read_table(spark, dst)) == \
         _digest(_with_chunk_key(extract(read_table(spark, src))))
+
+
+def test_wap_audits_src_commit_landing_mid_refresh(spark, tables,
+                                                   monkeypatch):
+    """A src commit that lands after wap_refresh_extracted reads src's
+    version, but before the refresh pins its own, is staged with the
+    rest. The join-pruned audits read every staged conversation, and
+    the publish stamps the version the refresh pinned."""
+    import pdf_parser_spark.sources.maintain as maintain
+
+    src, dst = tables
+    turns = read_table(spark, src)
+    first = turns.orderBy("turn_key").first().conv_id
+    late = turns.orderBy(F.col("turn_key").desc()).first().conv_id
+    assert first != late
+    _mutate_src(spark, src, n=1)
+    real = maintain.refresh_extracted_table
+
+    def racing_refresh(spark_, src_dir, *args, **kwargs):
+        batch = (read_table(spark_, src_dir)
+                 .where(F.col("conv_id") == late)
+                 .withColumn("text", F.lit("landed mid-refresh"))
+                 .withColumn("op", F.lit("upsert")))
+        merge_into(spark_, src_dir, batch)
+        return real(spark_, src_dir, *args, **kwargs)
+
+    audited = set()
+
+    def record(df):
+        audited.update(r.conv_id for r in
+                       df.select("conv_id").distinct().collect())
+        return df.limit(0)
+
+    monkeypatch.setattr(maintain, "refresh_extracted_table", racing_refresh)
+    out = wap_refresh_extracted(spark, src, dst, max_pruned_convs=0,
+                                audits={"record": record})
+    assert out["published"] is True and out["convs"] is None
+    assert audited == {first, late}
+    assert read_manifest(dst)["src_version"] == read_manifest(src)["version"]
+    assert _digest(read_table(spark, dst)) == \
+        _digest(_with_chunk_key(extract(read_table(spark, src))))
