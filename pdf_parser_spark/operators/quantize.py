@@ -389,14 +389,6 @@ def ivfpq_encode(df: DataFrame, centroids: list[list[float]],
         .select(id_col, "ivf_cell", "pq_codes")
 
 
-def _rank_cells(centroids: list[list[float]],
-                query_vec: list[float]) -> list[int]:
-    """similarity.rank_cells_by_query — one shared routine so probing
-    can never drift from ivf_assign's placement geometry."""
-    from pdf_parser_spark.operators.similarity import rank_cells_by_query
-    return rank_cells_by_query(centroids, query_vec)
-
-
 def ivfpq_adc_topk(codes_df: DataFrame, centroids: list[list[float]],
                    codebooks: list[list[list[float]]],
                    query_vec: list[float], top_k: int = 10, *,
@@ -408,9 +400,11 @@ def ivfpq_adc_topk(codes_df: DataFrame, centroids: list[list[float]],
     one literal. Returns (id_col, adc_dist, rank) ascending."""
     from pyspark.sql.window import Window
 
+    from pdf_parser_spark.operators.similarity import rank_cells_by_query
+
     m = len(codebooks)
     d_s = len(codebooks[0][0])
-    probed = _rank_cells(centroids, query_vec)[:n_probe]
+    probed = rank_cells_by_query(centroids, query_vec)[:n_probe]
     tables = []
     for c in probed:
         rq = [float(q) - float(x) for q, x in zip(query_vec, centroids[c])]

@@ -77,8 +77,8 @@ class ResidentIndex:
             raise ValueError(
                 f"corpus exceeds max_rows={max_rows}; a resident index "
                 "is for interactive serving of process-sized corpora — "
-                "use brute_force_topk / ann_topk / ivf_topk for the "
-                "distributed path")
+                "use brute_force_topk / ann_topk_multiprobe / ivf_topk "
+                "for the distributed path")
         return cls([r.id for r in rows],
                    [[float(x) for x in r.e] for r in rows])
 

@@ -72,8 +72,8 @@ def batch_search(corpus: DataFrame, queries: DataFrame, top_k: int = 5,
     throughput (BASELINE.md: 47 q/s vs the reference's ~7.7 q/s at its own
     corpus size) and the only shape that works when the corpus doesn't fit
     one machine. Queries must be broadcastable (thousands, not millions);
-    beyond that, bucket both sides by sign-LSH (similarity.with_lsh_bucket)
-    and join on bucket instead.
+    BASELINE.md's ANN frontier records the two-sided sign-LSH bucket join
+    measured for larger query sets.
     """
     w = Window.partitionBy(q_id_col).orderBy(F.desc("similarity"),
                                              F.asc(id_col))

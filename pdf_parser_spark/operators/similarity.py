@@ -7,18 +7,26 @@
   query) score 0.0.
 - ``brute_force_topk``: cosine + TakeOrderedAndProject — the exact-answer
   baseline (the reference's JSON-store scan, gea_qa_agent.py:243-261).
-- ``sign_lsh_bucket`` + ``ann_topk``: the scale path — random-hyperplane
-  LSH with hyperplanes derived deterministically from a seed, so bucket
-  assignment is reproducible across runs/engines. Probing b buckets means
-  scanning ~n/2^bits * b rows instead of n (the Chroma-HNSW analog,
-  reference gea_qa_agent_chroma.py:162-168, rebuilt as a bucketed scan).
+- ``sign_lsh_bucket`` + ``ann_topk_multiprobe``: random-hyperplane LSH
+  with hyperplanes derived deterministically from a seed, so bucket
+  assignment is reproducible across runs/engines, probed in
+  query-margin order. Probing b buckets means scanning ~n/2^bits * b
+  rows instead of n (the Chroma-HNSW analog, reference
+  gea_qa_agent_chroma.py:162-168, rebuilt as a bucketed scan).
+- ``ivf_train`` / ``ivf_topk``: coarse k-means cells, exact cosine over
+  the probed cells; the physical cell-clustered layout is the maintained
+  cow table (sources/maintain.build_ivf_table).
+
+The other ANN tiers (PQ, IVFADC, the kNN graph, the resident index)
+live in quantize.py, graphann.py and resident.py; BASELINE.md's "ANN
+frontier on the embedding fixtures" section records what each one wins.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -93,36 +101,6 @@ def _py_bucket(vec: list[float], planes: list[list[float]]) -> int:
     return b
 
 
-def ann_topk(df: DataFrame, query_vec: list[float], k: int = 10,
-             emb_col: str = "embedding", id_col: str = "vec_id",
-             n_planes: int = 8, seed: int = 42, probe_hamming: int = 1,
-             n_tables: int = 1) -> DataFrame:
-    """Approximate top-k: scan only buckets within ``probe_hamming`` bits of
-    the query's bucket, in each of ``n_tables`` independently-seeded hash
-    tables (candidates = union — the standard multi-table LSH construction:
-    per-table miss probabilities multiply, so recall ~ 1-(1-r)^L for ~L x
-    the scan fraction). At 10^12 rows with a bucketed/partitioned embedding
-    table this turns a full scan into partition pruning; here it's a
-    selective filter feeding the same exact cosine ranking. The measured
-    recall/scan tradeoff is pinned in tests/test_analytics_ops.py and
-    recorded in BASELINE.md."""
-    dim = len(query_vec)
-    qf = [float(x) for x in query_vec]
-    pred = None
-    bucketed = df
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + t)
-        qb = _py_bucket(qf, planes)
-        candidates = [b for b in range(1 << n_planes)
-                      if bin(b ^ qb).count("1") <= probe_hamming]
-        col = f"__lsh_{t}"
-        bucketed = bucketed.withColumn(
-            col, sign_lsh_bucket(F.col(emb_col), planes))
-        term = F.col(col).isin(candidates)
-        pred = term if pred is None else (pred | term)
-    return brute_force_topk(bucketed.where(pred), qf, k, emb_col, id_col)
-
-
 def _probe_masks(n_planes: int, margins: list[float],
                  n_probe: int) -> list[int]:
     """Flip masks ordered by the summed |margin| of their flipped planes —
@@ -145,15 +123,14 @@ def ann_topk_multiprobe(df: DataFrame, query_vec: list[float], k: int = 10,
     """Margin-guided ANN: per table, probe the ``n_probe`` buckets MOST
     LIKELY to hold the query's neighbors instead of a blind hamming ball.
 
-    :func:`ann_topk`'s hamming-ball probe treats all h-bit flips as
-    equally likely; the query's actual margins say otherwise — flipping
-    the 2 planes it nearly touches matters far more than the 2 it is far
-    from. Ordering candidate buckets by summed flipped-margin lets a
-    budget of 16/256 buckets (6 % scan per table) reach the recall a
-    41-bucket hamming ball needs (measured frontier in BASELINE.md; gate
-    in test_ann_recall_gates). Same execution shape as ann_topk: bucket
-    expressions + isin predicate + exact cosine rerank, which at scale is
-    partition pruning on a bucketed table.
+    A hamming-ball probe treats all h-bit flips as equally likely; the
+    query's actual margins say otherwise — flipping the 2 planes it
+    nearly touches matters far more than the 2 it is far from.
+    BASELINE.md's ANN frontier compares the two orders at the ball's own
+    budget (22 buckets at 6 planes); the recall gate is
+    test_ann_recall_gates. Execution shape: bucket expressions + isin
+    predicate + exact cosine rerank, which at scale is partition pruning
+    on a bucketed table.
 
     ``min_candidates``: optional two-stage budget — if the probed
     candidate set holds fewer rows, the probe budget doubles (and the
@@ -309,142 +286,6 @@ def ivf_topk(df: DataFrame, centroids: list[list[float]],
                             query_vec, k, emb_col, id_col)
 
 
-def write_ivf_partitioned(df: DataFrame, centroids: list[list[float]],
-                          path: str, emb_col: str = "embedding",
-                          mode: str = "error") -> None:
-    """The IVF index's PHYSICAL layout at scale: assign coarse cells and
-    write one partition directory per cell (``ivf_cell=<c>/``). A probed
-    query then reaches the scan as a PartitionFilter — unprobed cells'
-    files are never listed, opened, or read, which is the claim
-    ``ivf_topk`` only makes logically (its ``where`` prunes ROWS after
-    the scan unless the storage is cell-partitioned like this). The
-    same layout serves the IVFADC code table (quantize.ivfpq_encode
-    output also carries ``ivf_cell``)."""
-    ivf_assign(df, centroids, emb_col) \
-        .write.mode(mode).partitionBy("ivf_cell").parquet(path)
-
-
-def ivf_topk_partitioned(spark: SparkSession, path: str,
-                         centroids: list[list[float]],
-                         query_vec: list[float], k: int = 10,
-                         n_probe: int = 2, emb_col: str = "embedding",
-                         id_col: str = "vec_id") -> DataFrame:
-    """``ivf_topk`` over a cell-partitioned index directory: the probe
-    set becomes a partition filter, so the scan plans only the probed
-    cells' files (verify with ``.explain()`` — the FileScan shows
-    ``PartitionFilters: [ivf_cell IN (...)]`` and no data filter)."""
-    probe = rank_cells_by_query(centroids, query_vec)[:n_probe]
-    hits = spark.read.parquet(path).where(F.col("ivf_cell").isin(probe))
-    return brute_force_topk(hits, query_vec, k, emb_col, id_col)
-
-
-def _margin_probe_masks_udf(planes: list[list[float]], n_probe: int):
-    """Vectorized per-query probe-mask selection for the batch path: the
-    multi-probe ordering of :func:`_probe_masks`, computed for a whole
-    Arrow batch of queries in two matmuls (|Q @ P^T| gives per-plane
-    margins, margins @ maskbits^T scores every flip mask), then a
-    lexsorted top-``n_probe`` per row. A JVM-expression rendition would
-    reference each margin across ~2^planes mask structs and Catalyst's
-    projection collapse would re-inline the dot product per reference
-    (the PLANS.md §8 trap) — the batched numpy form is one pass."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    n_planes = len(planes)
-    P = np.asarray(planes, dtype=np.float64)            # planes x dim
-    masks = np.arange(1 << n_planes, dtype=np.int64)
-    maskbits = ((masks[:, None] >> np.arange(n_planes)) & 1) \
-        .astype(np.float64)                             # 2^p x planes
-
-    def pick(batch):  # pd.Series -> pd.Series (hints omitted: the
-        # `from __future__ import annotations` stringized form defeats
-        # pandas_udf's signature inference for nested functions)
-        Q = np.asarray([np.asarray(v, dtype=np.float64) for v in batch])
-        margins = np.abs(Q @ P.T)                       # b x planes
-        scores = margins @ maskbits.T                   # b x 2^p
-        # argsort by (score, mask): stable sort on the pre-ordered masks
-        order = np.argsort(scores, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    return pandas_udf(pick, ArrayType(IntegerType()))
-
-
-def batch_search_lsh(corpus: DataFrame, queries: DataFrame, dim: int,
-                     top_k: int = 5, emb_col: str = "embedding",
-                     id_col: str = "id", q_id_col: str = "q_id",
-                     q_emb_col: str = "q_emb", n_planes: int = 6,
-                     probe_hamming: int = 2, n_tables: int = 3,
-                     seed: int = 42,
-                     margin_probes: int | None = None) -> DataFrame:
-    """Beyond-broadcast batch retrieval: when the query set itself is too
-    large to broadcast (millions of queries x billions of corpus rows),
-    bucket BOTH sides with multi-table sign-LSH and join on
-    (table, bucket) — each query meets only its candidate corpus rows, so
-    the join is key-partitioned on both sides with no broadcast and no
-    cross product. Approximate with the same measured recall/scan
-    tradeoff as :func:`ann_topk`; the DEFAULT geometry (3 tables,
-    probe<=2) is exactly the configuration the pytest recall gate
-    measures (tests/test_analytics_ops.py). NB unlike the exact
-    broadcast path, a query whose probed buckets are all empty yields NO
-    output rows (the approximate analog of an empty result set) —
-    left-join back to the query table if per-query presence matters.
-
-    Shape per table t: corpus row -> 1 bucket row; query row -> its probe
-    set (buckets within ``probe_hamming`` of its own bucket, expanded as
-    an explode — a bounded fan-out of sum_{i<=h} C(planes, i) rows).
-    Candidates deduped on (q_id, id) across tables, exact cosine, window
-    top-k per query.
-
-    ``margin_probes`` (round 3): when set, each query probes its
-    ``margin_probes`` MOST LIKELY buckets (multi-probe ordering by
-    flipped-hyperplane margin, computed per Arrow batch — see
-    :func:`_margin_probe_masks_udf`) instead of the blind hamming ball —
-    the same frontier win :func:`ann_topk_multiprobe` measures, at batch
-    scale with a budget that is exact per query rather than a ball size.
-    """
-    from pyspark.sql.window import Window
-
-    corp_sides = []
-    query_sides = []
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + t)
-        bucket = sign_lsh_bucket(F.col(emb_col), planes)
-        corp_sides.append(corpus.select(
-            F.col(id_col).alias("id"), F.col(emb_col).alias("e"),
-            F.lit(t).alias("tbl"), bucket.alias("bkt")))
-        q_bucket = sign_lsh_bucket(F.col(q_emb_col), planes)
-        if margin_probes is not None:
-            mask_udf = _margin_probe_masks_udf(planes, margin_probes)
-            probes = F.transform(mask_udf(F.col(q_emb_col)),
-                                 lambda m: q_bucket.bitwiseXOR(m))
-        else:
-            # probe expansion: all masks within probe_hamming bits
-            masks = [m for m in range(1 << n_planes)
-                     if bin(m).count("1") <= probe_hamming]
-            probes = F.array(*[q_bucket.bitwiseXOR(F.lit(m))
-                               for m in masks])
-        query_sides.append(queries.select(
-            F.col(q_id_col).alias("qid"), F.col(q_emb_col).alias("qe"),
-            F.lit(t).alias("tbl"), F.explode(probes).alias("bkt")))
-    corp = corp_sides[0]
-    for s in corp_sides[1:]:
-        corp = corp.unionByName(s)
-    qry = query_sides[0]
-    for s in query_sides[1:]:
-        qry = qry.unionByName(s)
-    cand = (qry.join(corp, ["tbl", "bkt"])
-            .dropDuplicates(["qid", "id"]))
-    w = Window.partitionBy("qid").orderBy(F.desc("similarity"), F.asc("id"))
-    return (cand.withColumn("similarity",
-                            F.round(cosine(F.col("e"), F.col("qe")), 6))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= top_k)
-            .select(F.col("qid").alias(q_id_col), "rank",
-                    F.col("id").alias(id_col), "similarity"))
-
-
 def cosine_dup_pairs(df: DataFrame, dim: int, threshold: float = 0.95,
                      emb_col: str = "embedding", id_col: str = "vec_id",
                      n_planes: int = 8, seed: int = 42,
@@ -571,7 +412,7 @@ def semantic_dedup(df: DataFrame, *, k: int = 8, threshold: float = 0.9,
       state (``ivf_train`` exists when iterated centroids are wanted;
       here determinism and oracle parity win);
     - cell = argmax-cosine centroid, ties to the higher seed index
-      (``_argmax_cell``'s lexicographic array_max rule);
+      (the lexicographic (sim, cell) array_max rule);
     - a row is REMOVED iff a smaller-id row in the same cell has
       round(cosine, 6) >= threshold — the greedy min-id keeper, the same
       survivor rule as every other dedup tier (exact min-struct,
@@ -626,24 +467,6 @@ def seed_centroids(df: DataFrame, *, k: int = 8,
     return [[float(x) for x in r["e"]] for r in seeds]
 
 
-def assign_cells(df: DataFrame, *, k: int = 8,
-                 emb_col: str = "embedding", id_col: str = "vec_id",
-                 salt: str = "semdedup", method: str = "auto") -> DataFrame:
-    """Dispatch between the two bit-identical assignment twins: the
-    expression-literal argmax (fastest small-k shape) and the
-    broadcast-join argmax (the large-k/100 TB shape — Catalyst trees cap
-    the literal path near k ~ 32). ``method``: "auto" picks by k,
-    "expr" / "broadcast" force a path (equality pinned in pytest)."""
-    if method not in ("auto", "expr", "broadcast"):
-        raise ValueError(f"method must be auto|expr|broadcast: {method!r}")
-    if method == "expr" or (method == "auto" and k <= 32):
-        return assign_seed_cells(df, k=k, emb_col=emb_col, id_col=id_col,
-                                 salt=salt)
-    cents = seed_centroids(df, k=k, emb_col=emb_col, id_col=id_col,
-                           salt=salt)
-    return assign_cells_broadcast(df, cents, emb_col=emb_col, id_col=id_col)
-
-
 def assign_seed_cells(df: DataFrame, *, k: int = 8,
                       emb_col: str = "embedding", id_col: str = "vec_id",
                       salt: str = "semdedup") -> DataFrame:
@@ -652,7 +475,7 @@ def assign_seed_cells(df: DataFrame, *, k: int = 8,
     of the cluster-shaped embedding operators (semantic_dedup's cells,
     D4-style prototype pruning). Centroids are the embeddings of the k
     rows with the smallest (md5-hash-bucket, id); assignment ties go to
-    the higher seed index (``_argmax_cell``'s lexicographic array_max).
+    the higher seed index (lexicographic (sim, cell) array_max).
     ``csim`` is the cosine to the OWN cell's centroid; ``enorm`` the
     row's L2 norm, exposed so downstream pairwise cosines reuse it. Pure
     JVM expressions over one scan; empty input yields an empty frame of
@@ -714,16 +537,13 @@ def cluster_prune_prototypes(df: DataFrame, *, k: int = 8,
                              drop_frac: float = 0.2,
                              emb_col: str = "embedding",
                              id_col: str = "vec_id",
-                             salt: str = "semdedup",
-                             method: str = "auto") -> DataFrame:
+                             salt: str = "semdedup") -> DataFrame:
     """D4-style prototype pruning (Tirumala et al. 2023, the stage after
     SemDeDup): within each embedding cell, drop the ``drop_frac`` most
     PROTOTYPICAL rows — the ones closest to their centroid, i.e. the
     most redundant mass of the cluster — and keep the diverse remainder.
 
-    Deterministic: cells/centroids from :func:`assign_cells` (``method``
-    picks the expression or broadcast assignment twin — bit-identical,
-    "auto" switches on k);
+    Deterministic: cells/centroids from :func:`assign_seed_cells`;
     within a cell rows rank by (csim DESC, id ASC) and the first
     floor(drop_frac * cell_size) ranks are dropped. Returns survivors
     (id_col, cell, proto_sim = round(csim, 6)).
@@ -737,8 +557,8 @@ def cluster_prune_prototypes(df: DataFrame, *, k: int = 8,
         raise ValueError(f"drop_frac must be in [0, 1), got {drop_frac}")
     from pyspark.sql.window import Window
 
-    cells = assign_cells(df, k=k, emb_col=emb_col, id_col=id_col,
-                         salt=salt, method=method)
+    cells = assign_seed_cells(df, k=k, emb_col=emb_col, id_col=id_col,
+                              salt=salt)
     w = Window.partitionBy("cell").orderBy(F.desc("csim"), F.asc("id"))
     m = Window.partitionBy("cell")
     ranked = (cells.withColumn("__rn", F.row_number().over(w))
@@ -748,61 +568,6 @@ def cluster_prune_prototypes(df: DataFrame, *, k: int = 8,
                    > F.floor(F.lit(float(drop_frac)) * F.col("__m")))
             .select(F.col("id").alias(id_col), "cell",
                     F.round("csim", 6).alias("proto_sim")))
-
-
-def assign_cells_broadcast(df: DataFrame, centroids: list[list[float]], *,
-                           emb_col: str = "embedding",
-                           id_col: str = "vec_id") -> DataFrame:
-    """(id, e, cell, csim, enorm) — the large-k twin of
-    :func:`assign_seed_cells`'s assignment stage.
-
-    The expression-literal argmax (k cosines inlined into one
-    projection) is the fastest shape for small k but caps out around
-    k ~ 32: the Catalyst tree carries k x dim literals and Janino/
-    optimizer cost grows with it, while real SemDeDup/D4 runs want
-    thousands of cells. This twin broadcasts the centroids as ROWS
-    (k x dim floats — same driver footprint ivf_train already accepts),
-    cross-joins each embedding against them (n x k rows, map-local under
-    a BroadcastNestedLoopJoin — never a shuffle of the corpus), and
-    reduces with max_by-style ``F.max(struct(sim, cell))`` — a map-side-
-    combined aggregate, so the n x k stream collapses inside each task.
-    Tie rule identical to assign_seed_cells: (sim, cell) lexicographic,
-    higher index wins. One corpus shuffle on id for the final aggregate;
-    at 10^12 rows pre-aggregation leaves ~one row per input row, the
-    same cost class as any per-row groupBy.
-    """
-    spark = df.sparkSession
-    if not centroids:
-        base = df.select(F.col(id_col).alias("id"),
-                         F.col(emb_col).alias("e"))
-        return (base.select("id", "e", F.lit(0).cast("int").alias("cell"),
-                            F.lit(0.0).alias("csim"),
-                            F.lit(0.0).alias("enorm"))
-                .where(F.lit(False)))
-    import math
-    cent_rows = []
-    for i, c in enumerate(centroids):
-        acc = 0.0
-        for v in c:
-            acc += v * v
-        cent_rows.append((i, [float(v) for v in c], math.sqrt(acc)))
-    cents = spark.createDataFrame(cent_rows,
-                                  "cidx int, cvec array<double>, cnorm double")
-    base = (df.select(F.col(id_col).alias("id"), F.col(emb_col).alias("e"))
-            .withColumn("enorm", l2_norm(F.col("e"))))
-    denom = F.col("enorm") * F.col("cnorm")
-    sim = F.when(denom > 0,
-                 dot(F.col("e"), F.col("cvec")) / denom).otherwise(F.lit(0.0))
-    scored = (base.crossJoin(F.broadcast(cents))
-              .select("id", "e", "enorm",
-                      F.struct(sim.alias("sim"),
-                               F.col("cidx").alias("cell")).alias("__sc")))
-    best = (scored.groupBy("id")
-            .agg(F.max("__sc").alias("__best"),
-                 F.first("enorm").alias("enorm"), F.first("e").alias("e")))
-    return best.select("id", "e",
-                       F.col("__best")["cell"].cast("int").alias("cell"),
-                       F.col("__best")["sim"].alias("csim"), "enorm")
 
 
 def mmr_rerank(candidates: DataFrame, query_vec: list[float],

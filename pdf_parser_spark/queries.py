@@ -2303,26 +2303,17 @@ WHERE doc_id NOT IN (SELECT id FROM comp WHERE id <> component)
 
 
 
-def emb_ann_topk(spark, sf):
-    # multi-table sign-LSH ANN (recall measured + gated in
-    # tests/test_analytics_ops.py::test_ann_recall_gates; tradeoff table in
-    # BASELINE.md). Approximate by design -> rows-only, no SQL oracle.
-    from pdf_parser_spark.operators.similarity import ann_topk
-    emb = _t_wide(spark, sf, "embeddings")
-    q = [float(x) for x in
-         emb.where(F.col("vec_id") == 0).collect()[0].embedding]
-    return ann_topk(emb, q, k=10, n_planes=6, probe_hamming=2, n_tables=2)
-
-
 def emb_graph_topk(spark, sf):
-    # round-4 recall frontier: kNN-graph beam search (HNSW/NN-descent
-    # family, operators/graphann.py) — LSH-ring candidate generation +
+    # kNN-graph beam search (HNSW/NN-descent family,
+    # operators/graphann.py) — LSH-ring candidate generation +
     # NN-descent refinement builds the graph linearly; search expands a
     # beam frontier through broadcast joins, scanning entries +
-    # hops*beam*degree rows regardless of corpus size. Measured 0.96/0.90
-    # recall@10 at ~0.53 fixture scan — above the multi-probe LSH
-    # frontier (tests/test_graphann.py; BASELINE.md). Approximate by
-    # design -> rows-only, no SQL oracle.
+    # hops*beam*degree rows regardless of corpus size. With beam and
+    # hops fixed, recall falls as the corpus grows: recall@10 avg/min
+    # over 8 queries was 0.975/0.9 at 0.52 scan on sf0.001 (500 rows,
+    # 7 s build) but 0.65/0.4 at 0.18 scan on sf0.1 (2000 rows, 23 s
+    # build), below multi-probe LSH there (0.91/0.8 at 0.49; BASELINE.md
+    # ANN frontier). Approximate by design -> rows-only, no SQL oracle.
     from pdf_parser_spark.operators.graphann import (build_knn_graph,
                                                      graph_beam_search)
     emb = _t_wide(spark, sf, "embeddings")
@@ -2334,10 +2325,10 @@ def emb_graph_topk(spark, sf):
 
 
 def emb_ann_multiprobe_topk(spark, sf):
-    # round-3 frontier: margin-guided multi-probe LSH (Lv et al. 2007) —
-    # probes the buckets the query's hyperplane margins say are likeliest,
-    # not a blind hamming ball: measured 0.92/0.90 recall@10 at ~0.49 scan
-    # vs 0.92/0.96 at 0.70 for the hamming gate (BASELINE.md)
+    # margin-guided multi-probe LSH (Lv et al. 2007) — probes the
+    # buckets the query's hyperplane margins say are likeliest: recall@10
+    # avg/min over 8 queries 0.89/0.8 (sf0.001) and 0.91/0.8 (sf0.1), both
+    # at 0.49 scan (BASELINE.md ANN frontier)
     from pdf_parser_spark.operators.similarity import ann_topk_multiprobe
     emb = _t_wide(spark, sf, "embeddings")
     q = [float(x) for x in
@@ -4670,7 +4661,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "extract_synth_default": extract_synth_default,
     "extract_synth_cleaned": extract_synth_cleaned,
     "chunks_semantic_search": chunks_semantic_search,
-    "emb_ann_topk": emb_ann_topk,
     "emb_graph_topk": emb_graph_topk,
     "emb_ann_multiprobe_topk": emb_ann_multiprobe_topk,
     "emb_ivf_topk": emb_ivf_topk,
@@ -4698,21 +4688,17 @@ ROWS_ONLY: dict[str, str] = {
     "media_png_thumbnails": "synthesized PNG payloads decoded by the "
                             "stdlib default codec; pytest "
                             "(test_png_codec.py) + golden digest",
-    "emb_ann_topk": "approximate by design (sign-LSH); recall measured "
-                    "and gated in test_ann_recall_gates, exact-top-1 "
-                    "containment pinned",
     "emb_ivf_topk": "approximate by design (IVF probing); recall gated, "
                     "exact-top-1 containment pinned",
     "emb_graph_topk": "approximate by design (kNN-graph beam search); "
-                      "recall 0.96 avg / 0.90 min @10 measured and "
-                      "gated vs brute force in test_graphann.py, scan "
-                      "budget structurally bounded (entries + "
-                      "hops*beam*degree rows, corpus-independent), "
-                      "determinism pinned",
+                      "recall@10 gated vs brute force on sf0.001 in "
+                      "test_graphann.py (it falls at sf0.1: BASELINE.md "
+                      "ANN frontier), scan budget structurally bounded "
+                      "(entries + hops*beam*degree rows, "
+                      "corpus-independent), determinism pinned",
     "emb_ann_multiprobe_topk": "approximate by design (margin-guided "
                                "multi-probe LSH); recall gated vs brute "
-                               "force AND vs blind hamming at equal "
-                               "budget, exact-top-1 containment pinned",
+                               "force, exact-top-1 containment pinned",
     "emb_pq_topk": "approximate by design (PQ ADC candidates + exact "
                    "rerank); recall + determinism gated in "
                    "test_pq_search_recall_and_rerank_gates, exact-top-1 "

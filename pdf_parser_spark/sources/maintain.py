@@ -571,11 +571,11 @@ def build_ivf_table(spark: SparkSession, emb_dir: str, ivf_dir: str, *,
     the (chunk_key, ivf_cell, embedding) relation out CLUSTERED BY CELL
     with ``ivf_cell`` declared as a manifest stats column — probe
     queries then open only files whose cell bounds intersect the probe
-    set (``cowtable.files_for_values``), the cow-table rendition of the
-    partitioned-directory layout `write_ivf_partitioned` builds. The
-    centroids live in the manifest: later refreshes assign with the
-    SAME geometry (FAISS add-to-trained-index semantics; retrain =
-    rebuild).
+    set (``cowtable.files_for_values``). This is the product's physical
+    IVF layout; ``similarity.ivf_topk`` is the same probe over an
+    unclustered frame. The centroids live in the manifest: later
+    refreshes assign with the SAME geometry (FAISS add-to-trained-index
+    semantics; retrain = rebuild).
 
     ``pq_m``: also train residual PQ codebooks (quantize.pq_train over
     embedding - centroid[cell]) and store ``pq_codes`` per row — the

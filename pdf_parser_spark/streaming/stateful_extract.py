@@ -77,6 +77,7 @@ mid-document at all.
 from __future__ import annotations
 
 import json
+import os
 from typing import Iterator
 
 import pandas as pd
@@ -320,7 +321,20 @@ def stream_extract_stateful(spark: SparkSession, input_dir: str,
     batches, instead of silent state growth. The split runs in a
     foreachBatch sink; with it off the plain parquet sink is used and
     the stream is byte-identical to the pre-metrics behavior.
+
+    The two modes cannot share an output directory: an ``extracted``
+    dir the file sink wrote holds ``_spark_metadata``, and batch reads
+    of it then list only the files that log names, silently skipping
+    every file the foreachBatch sink appends. ``stall_metrics=True``
+    therefore raises ``ValueError`` before the stream starts when that
+    log exists.
     """
+    if stall_metrics and os.path.exists(
+            f"{output_dir}/extracted/_spark_metadata"):
+        raise ValueError(
+            f"{output_dir}/extracted was written by the file-sink mode "
+            "(it holds _spark_metadata), so batch reads would skip the "
+            "files stall_metrics=True appends; use a fresh output dir")
     # null-key gate before grouping (operators/merge._drop_null_keys twin)
     transcripts = landing_reader(spark, input_dir, max_files_per_trigger,
                                  drop_null_keys=True)

@@ -22,9 +22,10 @@ from pdf_parser_spark.operators.retrieval import (answer_with_context,
                                                   keyword_score,
                                                   search_by_text,
                                                   with_chunk_id)
-from pdf_parser_spark.operators.similarity import (ann_topk, brute_force_topk,
+from pdf_parser_spark.operators.similarity import (ann_topk_multiprobe,
+                                                   brute_force_topk,
                                                    cosine_dup_pairs,
-                                                   with_lsh_bucket)
+                                                   multiprobe_candidates)
 from pdf_parser_spark.operators.textstats import (lang_id_py, text_statistics,
                                                   token_count)
 
@@ -342,13 +343,16 @@ def test_brute_force_topk_matches_numpy(spark, emb_df):
 
 
 def test_ann_topk_contains_exact_hit(spark, emb_df):
+    """The LSH path probes the query's own bucket first (flip mask 0),
+    so even a one-bucket budget finds the query's own vector, while
+    scanning fewer rows than the table holds."""
     q = hash_embed_py("doc number 7", 16)
-    got = ann_topk(emb_df, q, k=3, n_planes=6, probe_hamming=1).collect()
-    assert got[0].vec_id == 7  # its own bucket always probed
-    n_scanned = with_lsh_bucket(emb_df, 16, n_planes=6).where(
-        F.col("lsh_bucket").isin(  # candidates scanned < full table
-            *range(64))).count()
-    assert n_scanned == 41
+    got = ann_topk_multiprobe(emb_df, q, k=3, n_planes=6, n_probe=1,
+                              n_tables=1).collect()
+    assert got[0].vec_id == 7
+    n_scanned = multiprobe_candidates(emb_df, q, n_planes=6, n_probe=1,
+                                      n_tables=1).count()
+    assert 0 < n_scanned < emb_df.count()
 
 
 def test_cosine_dup_pairs(spark, emb_df):
@@ -681,33 +685,11 @@ def test_ann_recall_gates(spark):
               for qid, q in qs.items()]
         return sum(rs) / len(rs), min(rs)
 
-    # multi-table LSH: 3 tables x (6 planes, probe<=2) — measured 0.92/0.90
-    avg, mn = recall(lambda q: ann_topk(emb, q, k=10, n_planes=6,
-                                        probe_hamming=2, n_tables=3))
-    assert avg >= 0.8 and mn >= 0.7, (avg, mn)
-
-    # round-3 frontier: margin-guided multi-probe (Lv et al.) — measured
-    # 0.92 avg / 0.80 min at ~0.49 scan fraction (vs 0.70 scan for the
-    # hamming-ball gate above; full tradeoff table in BASELINE.md)
-    from pdf_parser_spark.operators.similarity import ann_topk_multiprobe
+    # margin-guided multi-probe (Lv et al.) — measured 0.92 avg / 0.80
+    # min at ~0.49 scan fraction (frontier table in BASELINE.md)
     avg_mp, mn_mp = recall(lambda q: ann_topk_multiprobe(
         emb, q, k=10, n_planes=8, n_probe=32, n_tables=5))
     assert avg_mp >= 0.85 and mn_mp >= 0.7, (avg_mp, mn_mp)
-
-    # margin-guidance must beat the blind hamming ball at EQUAL probe
-    # budget (37 buckets/table): measured 0.90 vs 0.84 avg
-    avg_blind, _ = recall(lambda q: ann_topk(emb, q, k=10, n_planes=8,
-                                             probe_hamming=2, n_tables=4))
-    avg_guided, _ = recall(lambda q: ann_topk_multiprobe(
-        emb, q, k=10, n_planes=8, n_probe=37, n_tables=4))
-    assert avg_guided >= avg_blind, (avg_guided, avg_blind)
-
-    # single table baseline — measured 0.60/0.50: the multi-table union
-    # must beat it (the point of the construction)
-    avg1, _ = recall(lambda q: ann_topk(emb, q, k=10, n_planes=6,
-                                        probe_hamming=2, n_tables=1))
-    assert avg1 >= 0.45
-    assert avg > avg1
 
     # IVF, 4 of 8 cells probed — measured 0.74/0.60
     cents = ivf_train(emb, k=8, iters=2)
@@ -1213,57 +1195,6 @@ def test_components_long_chain_converges(spark):
     assert set(comps.values()) == {0} and len(comps) == 41
 
 
-def test_batch_search_lsh_recall_gate(spark, emb_df):
-    """The beyond-broadcast batch-retrieval path: per-query recall@5 vs
-    the exact broadcast batch search, at the same LSH geometry the ANN
-    gate measures."""
-    from pdf_parser_spark.operators.retrieval import batch_search
-    from pdf_parser_spark.operators.similarity import batch_search_lsh
-
-    corpus = emb_df.select(F.col("vec_id").alias("id"),
-                           F.col("embedding"))
-    queries = (emb_df.where(F.col("vec_id") < 6)
-               .select(F.col("vec_id").alias("q_id"),
-                       F.col("embedding").alias("q_emb")))
-    exact = {}
-    for r in batch_search(corpus, queries, top_k=5).collect():
-        exact.setdefault(r.q_id, set()).add(r.id)
-    approx = {}
-    got = batch_search_lsh(corpus, queries, dim=16, top_k=5,
-                           n_planes=6, probe_hamming=2,
-                           n_tables=3).collect()
-    for r in got:
-        approx.setdefault(r.q_id, set()).add(r.id)
-    recalls = [len(approx.get(q, set()) & hits) / len(hits)
-               for q, hits in exact.items()]
-    assert sum(recalls) / len(recalls) >= 0.7, recalls
-    # each query's own vector is its top hit and always in its own bucket
-    by_rank1 = {r.q_id: r.id for r in got if r.rank == 1}
-    for q in exact:
-        assert by_rank1.get(q) == q
-
-    # round-3 margin mode: the SAME budget as the blind h<=2 ball
-    # (22 masks at 6 planes) ordered by flipped-margin must not lose
-    # recall — and mask 0 sorts first, so rank-1 self-hits still hold
-    def _recall(rows):
-        by_q = {}
-        for r in rows:
-            by_q.setdefault(r.q_id, set()).add(r.id)
-        return sum(len(by_q.get(q, set()) & hits) / len(hits)
-                   for q, hits in exact.items()) / len(exact)
-
-    got_m = batch_search_lsh(corpus, queries, dim=16, top_k=5,
-                             n_planes=6, n_tables=3,
-                             margin_probes=22).collect()
-    assert _recall(got_m) >= sum(recalls) / len(recalls) - 1e-9
-    assert all(r.id == r.q_id for r in got_m if r.rank == 1)
-    # a third of the budget still clears the gate (the ordering works)
-    got_s = batch_search_lsh(corpus, queries, dim=16, top_k=5,
-                             n_planes=6, n_tables=3,
-                             margin_probes=8).collect()
-    assert _recall(got_s) >= 0.7
-
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -1505,35 +1436,52 @@ def test_unigram_logprob_hand_example(spark):
     assert got[1].avg_logprob > got[2].avg_logprob
 
 
-def test_assign_cells_broadcast_equals_expression_twin(spark, emb_df):
-    """The large-k broadcast-join argmax must produce the IDENTICAL
-    assignment (cell, csim, enorm — bit-level) as the expression-literal
-    twin, including the (sim, cell) lexicographic tie rule."""
-    from pdf_parser_spark.operators.sampling import hash_bucket
-    from pdf_parser_spark.operators.similarity import (
-        assign_cells_broadcast, assign_seed_cells)
-    # same seed centroids the expression twin derives internally
-    seeds = (emb_df.select("vec_id", "embedding",
-                           hash_bucket(F.col("vec_id"),
-                                       "semdedup").alias("hb"))
-             .orderBy("hb", "vec_id").limit(4).collect())
-    cents = [[float(x) for x in r.embedding] for r in seeds]
-    a = {r.id: (r.cell, r.csim, r.enorm)
-         for r in assign_seed_cells(emb_df, k=4).collect()}
-    b = {r.id: (r.cell, r.csim, r.enorm)
-         for r in assign_cells_broadcast(emb_df, cents).collect()}
-    assert a == b
-    # duplicate centroid => equal sims: the higher index must win in
-    # BOTH twins (lexicographic (sim, cell) max)
-    dup_cents = cents + [cents[0]]
-    c = {r.id: r.cell
-         for r in assign_cells_broadcast(emb_df, dup_cents).collect()}
-    for vid, (cell, _, _) in a.items():
-        if cell == 0:
-            assert c[vid] == 4  # the duplicate of centroid 0, higher idx
-    # empty-centroid degenerate mirrors the expression twin's shape
-    empty = assign_cells_broadcast(emb_df, [])
-    assert empty.count() == 0 and "cell" in empty.columns
+def test_assign_seed_cells_large_k_matches_python_argmax(spark):
+    """assign_seed_cells at k=64 (the training pipeline's default cell
+    count) equals a pure-Python argmax over the same seed centroids:
+    cell, csim and enorm bit-equal. Every vector appears twice under
+    two ids, so some seed centroids are duplicates and their equal sims
+    exercise the tie rule: the higher centroid index wins."""
+    import math
+
+    from pdf_parser_spark.operators.similarity import (assign_seed_cells,
+                                                       seed_centroids)
+
+    vecs = [[float(x) for x in hash_embed_py(f"large k {i}", 16)]
+            for i in range(150)]
+    rows = [(i, v) for i, v in enumerate(vecs)] \
+        + [(i + 1000, v) for i, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    cents = seed_centroids(df, k=64)
+    assert len(cents) == 64
+    assert len({tuple(c) for c in cents}) < 64  # ties are exercised
+
+    def norm(v):
+        acc = 0.0
+        for x in v:
+            acc += x * x
+        return math.sqrt(acc)
+
+    cnorms = [norm(c) for c in cents]
+    want = {}
+    for vid, v in rows:
+        en = norm(v)
+        best = None
+        for c, (cent, cn) in enumerate(zip(cents, cnorms)):
+            dot = 0.0
+            for x, y in zip(v, cent):
+                dot += x * y
+            den = en * cn
+            sc = (dot / den if den > 0 else 0.0, c)
+            best = sc if best is None or sc > best else best
+        want[vid] = (best[1], best[0], en)
+    got = {r.id: (r.cell, r.csim, r.enorm)
+           for r in assign_seed_cells(df, k=64).collect()}
+    assert got == want
+    # a vector that is itself a duplicated centroid lands on the higher
+    # of its two indexes
+    hi = next(c for c in range(64) if cents.index(cents[c]) != c)
+    assert {got[vid][0] for vid, v in rows if v == cents[hi]} == {hi}
 
 
 def test_dedup_paragraphs_corpus_scope(spark):
@@ -2218,58 +2166,12 @@ def test_ivfpq_recall_beats_plain_pq_and_scans_fewer_rows(spark):
     # the candidate stage reads only probed cells: 8 of 16 cells
     rows_by_cell = {r.ivf_cell: r["count"] for r in probe_rows}
     some_q = list(vecs.values())[0]
-    from pdf_parser_spark.operators.quantize import _rank_cells
-    probed = _rank_cells(cents, some_q)[:8]
+    from pdf_parser_spark.operators.similarity import rank_cells_by_query
+    probed = rank_cells_by_query(cents, some_q)[:8]
     scanned = sum(rows_by_cell.get(c, 0) for c in probed)
     assert scanned < n_total
     codes.unpersist()
     emb.unpersist()
-
-
-def test_ivf_partitioned_layout_prunes_and_matches(spark, emb_df,
-                                                   tmp_path):
-    """Physical IVF layout: the probe set reaches the scan as a
-    PARTITION filter (unprobed cells' directories never open), and the
-    answers are identical to the logical ivf_topk over the same data."""
-    import os
-
-    from pdf_parser_spark.operators.similarity import (
-        ivf_topk, ivf_topk_partitioned, ivf_train, rank_cells_by_query,
-        write_ivf_partitioned)
-
-    cents = ivf_train(emb_df, k=4, iters=2)
-    d = str(tmp_path / "ivf")
-    write_ivf_partitioned(emb_df, cents, d)
-    # one directory per observed cell
-    cell_dirs = sorted(p for p in os.listdir(d)
-                       if p.startswith("ivf_cell="))
-    assert len(cell_dirs) >= 2
-    q = hash_embed_py("doc number 7", 16)
-    got = ivf_topk_partitioned(spark, d, cents, q, k=3, n_probe=1)
-    want = ivf_topk(emb_df, cents, q, k=3, n_probe=1)
-    assert [(r.vec_id, round(r.similarity, 6)) for r in got.collect()] \
-        == [(r.vec_id, round(r.similarity, 6)) for r in want.collect()]
-    # the pruning is PHYSICAL: the plan carries a PartitionFilter on
-    # ivf_cell, and the executed scan's own metrics show fewer files
-    # and partition dirs read than the full index holds
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "ivf_cell" in \
-        plan.split("PartitionFilters")[1][:200]
-
-    def _scan_metrics(df):
-        df.collect()
-        scan = df._jdf.queryExecution().executedPlan() \
-                 .collectLeaves().apply(0)
-        mm = scan.metrics()
-        return (int(mm.apply("numFiles").value()),
-                int(mm.apply("numPartitions").value()))
-
-    probe = rank_cells_by_query(cents, q)[:1]
-    pruned = _scan_metrics(spark.read.parquet(d)
-                           .where(F.col("ivf_cell").isin(probe)))
-    full = _scan_metrics(spark.read.parquet(d))
-    assert pruned[1] == 1 and full[1] == len(cell_dirs)
-    assert 0 < pruned[0] < full[0]
 
 
 def test_embed_incremental_equals_direct_and_caches(spark, tmp_path):

@@ -72,14 +72,6 @@ def test_ivf_topk_contains_exact_hit(spark):
     assert abs(top[0].similarity - 1.0) < 1e-6
 
 
-def test_ann_topk_contains_exact_hit_driver_entry(spark):
-    """Same pin for the LSH driver entry (the operator-level test covers
-    ann_topk on a toy table; this covers the contract entry's params)."""
-    top = QUERIES["emb_ann_topk"](spark, SF_DIR).collect()
-    assert top[0].vec_id == 0
-    assert abs(top[0].similarity - 1.0) < 1e-6
-
-
 def test_ann_multiprobe_contains_exact_hit(spark):
     top = QUERIES["emb_ann_multiprobe_topk"](spark, SF_DIR).collect()
     assert top[0].vec_id == 0
@@ -116,6 +108,6 @@ def test_registry_guard():
     assert all(isinstance(v, str) and v for v in ROWS_ONLY.values())
     # the deterministic rows-only entries must all carry a golden digest
     assert set(GOLDEN) == set(ROWS_ONLY) - {
-        "emb_ann_topk", "emb_ivf_topk", "emb_ann_multiprobe_topk",
+        "emb_ivf_topk", "emb_ann_multiprobe_topk",
         "emb_pq_topk", "emb_funnel_topk", "emb_ivfpq_topk",
         "emb_graph_topk"}

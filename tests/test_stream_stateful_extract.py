@@ -345,6 +345,27 @@ def test_gap_stall_metrics_report_and_clear(spark, tmp_path):
     assert got == _batch_expected(spark, rows)
 
 
+def test_stall_metrics_refuses_file_sink_output_dir(spark, tmp_path):
+    """An extracted/ dir the file sink wrote carries _spark_metadata;
+    batch reads of it list only that log's files, so foreachBatch
+    appends there would be skipped silently. stall_metrics=True must
+    refuse that dir before any stream starts."""
+    inp = tmp_path / "landing"; inp.mkdir()
+    out = tmp_path / "out"
+    _write_landing(inp / "a.parquet",
+                   generate_transcripts(2, seed=3, max_turns=4))
+    _drain(spark, inp, out, tmp_path / "ckpt")
+    assert (out / "extracted" / "_spark_metadata").is_dir()
+    n_active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        stream_extract_stateful(spark, str(inp), str(out),
+                                str(tmp_path / "ckpt2"),
+                                stall_metrics=True)
+    assert len(spark.streams.active) == n_active
+    assert not (tmp_path / "ckpt2").exists()
+    assert not (out / "stall_metrics").exists()
+
+
 def test_ttl_drop_metric_on_timeout_with_buffered_turns():
     """The retention twin of the gap-stall metric: a TTL firing while
     turns sit in the reorder buffer must emit one __ttl_drop diagnostic
